@@ -106,7 +106,8 @@ def word_shingle_hashes_np(text: Column | str, n: int = 3) -> Column:
 
         out = []
         for t in texts:
-            words = t.split(" ")
+            # a NULL text has no shingles, as in the Column form
+            words = t.split(" ") if t is not None else []
             nw = len(words)
             if nw < n:
                 out.append(np.empty(0, dtype=np.int64))

@@ -20,10 +20,14 @@ content unchanged.)
 
 from __future__ import annotations
 
+from collections import OrderedDict
+from urllib.parse import unquote, urlparse
+
 import pyspark.sql.functions as F
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.sources import (
+    file_stamp,
     load_table,
     spread_small_scan,
 )
@@ -35,12 +39,27 @@ from multi_threaded_mapreduce_framework_spark.sources import (
 # was the sf0.1 point of that curve (5000 docs / 8 tasks = 625
 # rows/task), and a 20x fixture moved the optimum to cores/2
 # (100k / 16 = 6250).  ~600 rows/task reproduces both optima within
-# ~6%.  The row count comes from ONE parquet-metadata count per
-# (session, plan) — memoized so the suite pays it once per table, and
-# irrelevant on production inputs where the scan already has enough
-# splits to no-op the spread entirely.
+# ~6%.  The row count comes from ONE parquet-metadata count per plan
+# and input-file version — memoized so the suite pays it once per table,
+# re-counted when a table is rewritten, and irrelevant on production
+# inputs where the scan already has enough splits to no-op the spread
+# entirely.
 _SPREAD_ROWS_PER_TASK = 600
-_ROWCOUNT_MEMO: dict = {}
+_ROWCOUNT_MEMO: OrderedDict[tuple, int] = OrderedDict()
+_ROWCOUNT_MEMO_MAX = 64
+
+
+def _input_stamp(df) -> tuple | None:
+    """``file_stamp`` of every file ``df`` reads; ``None`` when one is
+    not a local file, so its version cannot be checked."""
+    stamps = []
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        st = file_stamp(unquote(u.path)) if u.scheme in ("", "file") else None
+        if st is None:
+            return None
+        stamps.append(st)
+    return tuple(stamps)
 
 
 def _spread_chain(df):
@@ -48,17 +67,17 @@ def _spread_chain(df):
     clamp(rows / ~600, 2, cores) partitions (see the fan-out law
     above); no-op once the scan already has that many splits, so
     production inputs are untouched."""
-    from multi_threaded_mapreduce_framework_spark.sources import (
-        spread_small_scan,
-    )
-
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    key = (spark.sparkContext.applicationId, df.semanticHash())
+    stamp = _input_stamp(df)
+    key = (df.semanticHash(), stamp)
     rows = _ROWCOUNT_MEMO.get(key)
     if rows is None:
         rows = df.count()  # parquet-footer count: one tiny metadata job
-        _ROWCOUNT_MEMO[key] = rows
+        if stamp is not None:
+            _ROWCOUNT_MEMO[key] = rows
+            if len(_ROWCOUNT_MEMO) > _ROWCOUNT_MEMO_MAX:
+                _ROWCOUNT_MEMO.popitem(last=False)
     n = min(cores, max(2, -(-rows // _SPREAD_ROWS_PER_TASK)))
     return spread_small_scan(df, target=n)
 

@@ -21,13 +21,21 @@ import os
 import tempfile
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
-from multi_threaded_mapreduce_framework_spark.sources import layout_tag
+from multi_threaded_mapreduce_framework_spark.sources import layout_tag, read_parquet
+from multi_threaded_mapreduce_framework_spark.streaming.windowed import start_stream
 
 # (applicationId, sf_dir) -> state_dir whose stream already ran this
 # session.  Same cache discipline as t2_cluster._PAIR_CACHE: the
 # application id key cannot resurrect state from a dead context, and a
 # re-run within one session reuses its own completed stream run.
 _MATVIEW_STATE_CACHE: dict = {}
+
+# The state-v2 (transformWithStateInPandas) queries need RocksDB; it is
+# scoped to their own start (start_stream), never left on the session.
+_ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass": "org.apache.spark.sql."
+    "execution.streaming.state.RocksDBStateStoreProvider"
+}
 
 
 @register(
@@ -229,11 +237,6 @@ def q189_tws_state_readback(spark, sf_dir):
     cached = _MATVIEW_STATE_CACHE.get(key)
     if cached is None:
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
         base = os.path.join(
             tempfile.gettempdir(),
             "mtmrf_layout",
@@ -246,14 +249,14 @@ def q189_tws_state_readback(spark, sf_dir):
             "user_id", F.expr(_MICRO_SQL.replace("value", "value")).alias("vm")
         )
         table = f"q189_tws_{abs(hash(key)) % 10**9}"
-        q = (
+        writer = (
             running_user_totals_tws_micro(stream)
             .writeStream.outputMode("update")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay, _ROCKSDB)
         try:
             q.processAllAvailable()
         finally:
@@ -329,11 +332,6 @@ def q190_tws_timer_sessions(spark, sf_dir):
     cached = _MATVIEW_STATE_CACHE.get(key)
     if cached is None:
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
         base = os.path.join(
             tempfile.gettempdir(),
             "mtmrf_layout",
@@ -342,7 +340,7 @@ def q190_tws_timer_sessions(spark, sf_dir):
         )
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
-        ev = spark.read.parquet(replay)
+        ev = read_parquet(spark, replay)
         sent = (
             ev.orderBy(F.desc("ts"))
             .limit(1)
@@ -363,14 +361,14 @@ def q190_tws_timer_sessions(spark, sf_dir):
             "user_id", "ts", "unix_micros(ts) AS us", "event_id"
         )
         table = f"q190_tws_{abs(hash(key)) % 10**9}"
-        q = (
+        writer = (
             session_finalizer_tws(stream, gap_s=1800)
             .writeStream.outputMode("append")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay, _ROCKSDB)
         try:
             q.processAllAvailable()
         finally:
@@ -445,11 +443,6 @@ def q231_tws_liststate_lastk(spark, sf_dir):
     cached = _MATVIEW_STATE_CACHE.get(key)
     if cached is None:
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
         base = os.path.join(
             tempfile.gettempdir(),
             "mtmrf_layout",
@@ -465,14 +458,14 @@ def q231_tws_liststate_lastk(spark, sf_dir):
             f"coalesce({_MICRO_SQL}, 0) AS vm",
         )
         table = f"q231_tws_{abs(hash(key)) % 10**9}"
-        q = (
+        writer = (
             recent_values_tws(stream, k=3)
             .writeStream.outputMode("update")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay, _ROCKSDB)
         try:
             q.processAllAvailable()
         finally:
@@ -531,11 +524,6 @@ def q237_tws_mapstate_census(spark, sf_dir):
     cached = _MATVIEW_STATE_CACHE.get(key)
     if cached is None:
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
         base = os.path.join(
             tempfile.gettempdir(),
             "mtmrf_layout",
@@ -546,14 +534,14 @@ def q237_tws_mapstate_census(spark, sf_dir):
         replay_events(spark, sf_dir, replay, n_chunks=3)
         stream = events_stream(spark, replay).select("user_id", "event_type")
         table = f"q237_tws_{abs(hash(key)) % 10**9}"
-        q = (
+        writer = (
             event_type_census_tws(stream)
             .writeStream.outputMode("update")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay, _ROCKSDB)
         try:
             q.processAllAvailable()
         finally:
@@ -617,11 +605,6 @@ def q242_tws_initial_state(spark, sf_dir):
         from multi_threaded_mapreduce_framework_spark.sources import load_table
 
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
         base = os.path.join(
             tempfile.gettempdir(),
             "mtmrf_layout",
@@ -646,14 +629,14 @@ def q242_tws_initial_state(spark, sf_dir):
             "user_id", F.expr(_MICRO_SQL).alias("vm")
         )
         table = f"q242_tws_{abs(hash(key)) % 10**9}"
-        q = (
+        writer = (
             bootstrapped_user_totals_tws(stream, snapshot.groupBy("user_id"))
             .writeStream.outputMode("update")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay, _ROCKSDB)
         try:
             q.processAllAvailable()
         finally:
@@ -730,13 +713,13 @@ def q244_stream_dedup_readback(spark, sf_dir):
             ["event_id"],
         )
         table = f"q244_dedup_{abs(hash(key)) % 10**9}"
-        q = (
+        writer = (
             stream.writeStream.outputMode("append")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay)
         try:
             q.processAllAvailable()
         finally:
@@ -819,13 +802,13 @@ def q248_stream_dedup_watermark(spark, sf_dir):
             watermark="3650 days",
         )
         table = f"q248_dedup_wm_{abs(hash(key)) % 10**9}"
-        q = (
+        writer = (
             stream.writeStream.outputMode("append")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay)
         try:
             q.processAllAvailable()
         finally:
@@ -904,7 +887,7 @@ def _append_window_run(spark, sf_dir, tag, duration, slide):
         )
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
-        ev = spark.read.parquet(replay)
+        ev = read_parquet(spark, replay)
         # sentinel columns cast to the FIXTURE's own types (value may be
         # DOUBLE or DECIMAL depending on the corpus writer) — a mixed-
         # schema replay dir breaks the stream's parquet read of `value`
@@ -946,13 +929,13 @@ def _append_window_run(spark, sf_dir, tag, duration, slide):
             )
         )
         table = f"{tag}_{abs(hash(key)) % 10**9}"
-        q = (
+        writer = (
             agg.writeStream.outputMode("append")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay)
         try:
             q.processAllAvailable()
         finally:
@@ -1073,13 +1056,13 @@ def q262_stream_restart_readback(spark, sf_dir):
                     F.sum(F.expr(_MICRO_SQL)).cast("bigint").alias("sum_micro"),
                 )
             )
-            q = (
+            writer = (
                 agg.writeStream.outputMode("complete")
                 .format("memory")
                 .queryName(table)
                 .option("checkpointLocation", ckpt)
-                .start()
             )
+            q = start_stream(spark, writer, replay)
             try:
                 q.processAllAvailable()
             finally:
@@ -1160,13 +1143,13 @@ def q263_stream_file_sink_readback(spark, sf_dir):
                 ),
                 ["event_id"],
             )
-            q = (
+            writer = (
                 stream.writeStream.outputMode("append")
                 .format("parquet")
                 .option("path", sink)
                 .option("checkpointLocation", ckpt)
-                .start()
             )
+            q = start_stream(spark, writer, replay)
             try:
                 q.processAllAvailable()
             finally:
@@ -1292,11 +1275,11 @@ def q264_stream_upsert_readback(spark, sf_dir):
             out = os.path.join(base, f"state_v{batch_id}")
             last.write.mode("overwrite").parquet(out)
 
-        q = (
+        writer = (
             stream.writeStream.foreachBatch(upsert)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay)
         try:
             q.processAllAvailable()
         finally:
@@ -1371,13 +1354,13 @@ def q265_stream_update_changelog(spark, sf_dir):
             )
         )
         table = f"q265_changelog_{abs(hash(key)) % 10**9}"
-        q = (
+        writer = (
             agg.writeStream.outputMode("update")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
+        q = start_stream(spark, writer, replay)
         try:
             q.processAllAvailable()
         finally:
@@ -1421,7 +1404,7 @@ def build_session_replay(spark, sf_dir, replay):
 
     SENTINEL = 999_999_999
     replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
-    ev = spark.read.parquet(replay)
+    ev = read_parquet(spark, replay)
     vt = ev.schema["value"].dataType.simpleString()
     sent = (
         ev.orderBy(F.desc("ts"))
@@ -1466,13 +1449,13 @@ def run_session_stream(spark, replay, ckpt, table):
             ).alias("dur_us"),
         )
     )
-    q = (
+    writer = (
         per_session.writeStream.outputMode("append")
         .format("memory")
         .queryName(table)
         .option("checkpointLocation", ckpt)
-        .start()
     )
+    q = start_stream(spark, writer, replay)
     try:
         q.processAllAvailable()
     finally:

@@ -1,7 +1,9 @@
 from multi_threaded_mapreduce_framework_spark.sources.fixtures import (
     TABLES,
+    file_stamp,
     layout_tag,
     load_table,
+    read_parquet,
     register_views,
     spread_small_scan,
     table_path,
@@ -14,8 +16,10 @@ from multi_threaded_mapreduce_framework_spark.sources.pydatasource import (
 
 __all__ = [
     "TABLES",
+    "file_stamp",
     "layout_tag",
     "load_table",
+    "read_parquet",
     "register_views",
     "spread_small_scan",
     "table_path",

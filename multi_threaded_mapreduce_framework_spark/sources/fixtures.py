@@ -14,14 +14,22 @@ layouts the driver has generated across rounds:
 - TIMESTAMP(MICROS, isAdjustedToUTC=false): reads as TIMESTAMP_NTZ;
   cast to TIMESTAMP under the engine's pinned UTC session timezone, an
   exact mapping that matches DuckDB's naive read.
+
+Fixture and stream-replay reads go through ``read_parquet``: a plain
+``spark.read.parquet`` runs a one-task footer-merge job to infer the
+schema on every call, so the schema Spark inferred on the first read is
+memoized and later reads pin it (zero jobs). The memo holds schemas
+only; every scan still runs.
 """
 
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -43,6 +51,72 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# The confs that change the schema Spark infers from the same files: the
+# five the parquet schema converter reads, and whether footers are merged.
+# They are part of the schema memo's key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_MEMO: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMA_MEMO_MAX = 256
+
+
+def _visible(name: str) -> bool:
+    # Spark's listing skips "_"/"." names, except the parquet summary
+    # files, which schema inference reads first when present
+    return not name.startswith(("_", ".")) or name in ("_metadata", "_common_metadata")
+
+
+def file_stamp(path: str) -> tuple | None:
+    """Identity of a local file, ``(st_ino, st_ctime_ns, st_size)``; for a
+    directory, the sorted identities of its visible files, recursively.
+    ``None`` when the path does not exist.
+
+    ctime, not mtime: ``bump_new_file_mtimes`` stamps mtimes in the past,
+    so two versions of a file can share an mtime, but any rewrite or
+    ``os.utime`` moves the ctime."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not os.path.isdir(path):
+        return ((st.st_ino, st.st_ctime_ns, st.st_size),)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if _visible(d)]
+        for f in filter(_visible, files):
+            p = os.path.join(root, f)
+            fs = os.stat(p)
+            out.append((p, fs.st_ino, fs.st_ctime_ns, fs.st_size))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version: later reads pin the ``StructType`` Spark inferred, and so
+    launch no schema-merge job. Keyed on the absolute path, its
+    ``file_stamp`` and ``_SCHEMA_CONFS``; a missing or non-local path
+    falls through to the plain read (and so to Spark's own error)."""
+    local = os.path.abspath(path)
+    stamp = file_stamp(local)
+    if stamp is None:
+        return spark.read.parquet(path)
+    key = (local, stamp, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        df = spark.read.parquet(local)
+        _SCHEMA_MEMO[key] = df.schema
+        if len(_SCHEMA_MEMO) > _SCHEMA_MEMO_MAX:
+            _SCHEMA_MEMO.popitem(last=False)
+        return df
+    return spark.read.schema(schema).parquet(local)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; normalizes ``events.ts`` to TimestampType."""
     if name == "events":
@@ -50,7 +124,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = read_parquet(spark, table_path(sf_dir, name))
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             # ns -> us truncation == DuckDB epoch_us(ts); session tz is UTC
@@ -61,7 +135,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # the cast is exact and matches DuckDB's naive read
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def spread_small_scan(

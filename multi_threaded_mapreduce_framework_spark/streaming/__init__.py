@@ -33,6 +33,8 @@ from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
     run_to_convergence,
     session_counts,
     sliding_window_counts,
+    start_stream,
+    state_partitions,
     stream_dedup,
     stream_dedup_within_watermark,
     tumbling_window_counts,
@@ -61,6 +63,8 @@ __all__ = [
     "run_to_convergence",
     "session_counts",
     "sliding_window_counts",
+    "start_stream",
+    "state_partitions",
     "stream_dedup",
     "stream_dedup_within_watermark",
     "tumbling_window_counts",

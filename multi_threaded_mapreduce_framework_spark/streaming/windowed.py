@@ -14,6 +14,19 @@ finalized), and ``session_window`` state is evicted per the same
 watermark — this is what makes the operator runnable on an unbounded
 100 TB/day stream, unlike the batch q23 whose window-lag plan needs the
 full history per user.
+
+State partitions: a stateful operator keeps one state-store partition per
+shuffle partition, and each one pays a state-store commit every
+micro-batch, whether it holds keys or not. AQE, which coalesces
+partitions in batch, does not run on a stateful stream. ``start_stream``
+therefore sizes the count to the input, with AQE's own target size:
+``clamp(ceil(input bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes),
+1, defaultParallelism)``. It sets it for the start only and restores the
+session's value; the query keeps it because it runs on a session clone
+taken at ``start()``. A restart from the same checkpoint keeps the count
+even if the input has grown, because the checkpoint's offset metadata
+(``offsets/N``) pins ``spark.sql.shuffle.partitions``. To change it, start
+from a new checkpoint.
 """
 
 from __future__ import annotations
@@ -23,9 +36,13 @@ import time as _time
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from multi_threaded_mapreduce_framework_spark.sources import load_table
+from multi_threaded_mapreduce_framework_spark.sources import (
+    file_stamp,
+    load_table,
+    read_parquet,
+)
 
 
 def _data_files(out_dir: str) -> list[str]:
@@ -121,12 +138,56 @@ def events_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-source stream over a replayed events directory, one file per
     trigger — simulates incremental arrival with out-of-order timestamps
     (chunks are hash-partitioned, not time-ordered)."""
-    schema = spark.read.parquet(src_dir).schema
+    schema = read_parquet(spark, src_dir).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
+
+
+def state_partitions(spark: SparkSession, src_dir: str) -> int:
+    """State-store partition count for a stateful stream over ``src_dir``:
+    ``clamp(ceil(input bytes / advisoryPartitionSizeInBytes), 1, cores)``.
+    This is AQE's own target partition size, applied to the stateful
+    stage, where AQE does not run. Each state partition pays a
+    state-store commit per micro-batch, so a small input gets few."""
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    size = sum(s[-1] for s in file_stamp(src_dir) or ())
+    return min(spark.sparkContext.defaultParallelism, max(1, -(-size // advisory)))
+
+
+def start_stream(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    src_dir: str,
+    confs: dict[str, str] | None = None,
+) -> StreamingQuery:
+    """``writer.start()`` with ``spark.sql.shuffle.partitions`` set to
+    ``state_partitions(spark, src_dir)`` and any ``confs`` set, for the
+    start only; the session's own values are restored after it.
+
+    The query keeps the scoped values because it runs on a clone of the
+    session taken at ``start()``. A restart from the same checkpoint
+    keeps the partition count (and the state-store provider), because
+    the checkpoint's offset metadata pins them."""
+    scoped = {
+        "spark.sql.shuffle.partitions": str(state_partitions(spark, src_dir)),
+        **(confs or {}),
+    }
+    saved = {k: spark.conf.get(k, None) for k in scoped}
+    try:
+        for k, v in scoped.items():
+            spark.conf.set(k, v)
+        return writer.start()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def tumbling_window_counts(stream: DataFrame) -> DataFrame:

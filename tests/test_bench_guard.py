@@ -107,3 +107,21 @@ def test_bless_record_refuses_contaminated_payload(tmp_path):
     # beside it for adjudication
     assert json.load(open(path)) == clean
     assert json.load(open(path + ".dirty")) == dirty
+
+
+
+def test_ab_equal_sorts_a_nullable_result():
+    # a nullable result must compare, not raise on None < value
+    from tools.ab_equal import rows_key
+
+    class Result:  # the two DataFrame members rows_key reads
+        columns = ["k", "v"]
+
+        def collect(self):
+            rows = [(1, None), (None, "a"), (1, "b"), (None, None), (0, "z")]
+            return [dict(zip(self.columns, r)) for r in rows]
+
+    assert rows_key(Result()) == (
+        ["k", "v"],
+        [(0, "z"), (1, "b"), (1, None), (None, "a"), (None, None)],
+    )

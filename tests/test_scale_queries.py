@@ -141,6 +141,22 @@ def test_bigram_mg_candidates_superset_and_seams(spark):
     assert cand <= real, cand - real
 
 
+def test_bigram_mg_candidates_drop_null_text(spark):
+    # a NULL text has no bigrams, as in the explode form the kernel
+    # replaced; it must not raise inside the Python worker
+    from multi_threaded_mapreduce_framework_spark.functions.heavy_hitters import (
+        bigram_mg_candidates,
+    )
+
+    docs = spark.createDataFrame(
+        [("a b c",), (None,), ("c a",), (None,)], "text string"
+    ).repartition(1)
+    cand = {r["shingle"] for r in bigram_mg_candidates(docs, "text", 100).collect()}
+    assert cand == {"a b", "b c", "c a"}
+    only_null = spark.createDataFrame([(None,)], "text string")
+    assert bigram_mg_candidates(only_null, "text", 100).collect() == []
+
+
 def test_q135_equals_exact_groupby(spark, sf_dir):
     df = QUERIES["q135_heavy_hitter_shingles"].builder(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")

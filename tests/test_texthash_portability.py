@@ -111,6 +111,27 @@ def test_word_shingle_hashes_np_parity(spark, docs_df):
         assert list(r.a) == list(r.b), r.i
 
 
+def test_word_shingle_hashes_np_null_text(spark):
+    # a NULL text has no shingles: the same empty array as the Column
+    # form, so an explode of either drops the row
+    from multi_threaded_mapreduce_framework_spark.functions.texthash import (
+        word_shingle_hashes_np,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, None), (3, None)], "i bigint, t string"
+    )
+    got = df.select(
+        "i",
+        word_shingle_hashes("t").alias("a"),
+        word_shingle_hashes_np("t").alias("b"),
+    ).collect()
+    for r in got:
+        assert list(r.a) == list(r.b), r.i
+    exploded = df.select("i", F.explode(word_shingle_hashes_np("t")).alias("h"))
+    assert {r.i for r in exploded.collect()} == {1}
+
+
 def test_minhash_signature_match_and_np_parity(docs_df, duck):
     base = docs_df.select(
         "i", word_shingle_hashes("t").alias("hs")

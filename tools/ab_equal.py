@@ -23,7 +23,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def rows_key(df):
     cols = df.columns
-    rows = sorted(tuple(r[c] for c in cols) for r in df.collect())
+    rows = sorted(
+        (tuple(r[c] for c in cols) for r in df.collect()),
+        # a NULL sorts after every value of its column, never compared with one
+        key=lambda row: tuple((v is None, v) for v in row),
+    )
     return cols, rows
 
 
