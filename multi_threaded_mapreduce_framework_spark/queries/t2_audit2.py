@@ -235,9 +235,20 @@ def q227_class_separability(spark, sf_dir):
     # two repartition exchanges cost more than the 1-split scan saves
     # (paired A/B 1.49 -> 1.23 s); real multi-split input parallelizes
     # at the scan as usual
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
+    v = F.col("embedding").cast("array<double>")
+    # the centroid and cosine folds read DIM elements: a vector of any
+    # other length fails the query by name instead of being truncated
+    v = F.when(v.isNull() | (F.size(v) == DIM), v).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"EMBEDDING_DIM_MISMATCH: q227 needs {DIM}-dim embeddings,"
+                " vec_id %d has %d",
+                "vec_id",
+                F.size(v),
+            )
+        )
     )
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", v.alias("v"))
     # per-label centroid: one shuffle of |labels| x (64 avg) partials;
     # avg per element (null-skipping) matches the exploded-avg law for
     # any vector length

@@ -17,22 +17,29 @@ conventions as the rest of the registry (FIXTURES.md).
 
 from __future__ import annotations
 
+import datetime
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
-from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-    _MATVIEW_STATE_CACHE,
-)
-from multi_threaded_mapreduce_framework_spark.sources import layout_tag
 from multi_threaded_mapreduce_framework_spark.queries.t2_dedup import (
     COSINE_NEARDUP_THRESHOLD,
     IVF_CENTROIDS,
 )
-from multi_threaded_mapreduce_framework_spark.sources import load_table, spread_small_scan
+from multi_threaded_mapreduce_framework_spark.sources import (
+    fresh_layout_dir,
+    load_table,
+    session_memo,
+    spread_small_scan,
+)
+from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+    _data_files,
+    bump_new_file_mtimes,
+    drain,
+    start_stream,
+)
 
 # ------------------------------------------------------------------ q192
 # The docgen law (sources/pydatasource.py:_doc_row) re-stated in SQL.
@@ -137,10 +144,6 @@ def q192_docgen_census(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ q266
-# (applicationId, sf_dir) -> census readback; the stream ran once
-_DGSTREAM_CACHE: dict = {}
-
-
 @register(
     "q266_pydatasource_stream_census",
     tier="T2",
@@ -197,9 +200,7 @@ def q266_pydatasource_stream_census(spark, sf_dir):
         register_python_sources,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dgstream")
-    cached = _DGSTREAM_CACHE.get(key)
-    if cached is None:
+    def build():
         register_python_sources(spark)
         stream = (
             spark.readStream.format("docgen")
@@ -228,20 +229,17 @@ def q266_pydatasource_stream_census(spark, sf_dir):
                 F.max("doc_id").cast("bigint").alias("max_doc"),
             )
         )
-        table = f"q266_dgstream_{abs(hash(key)) % 10**9}"
+        table = "q266_dgstream"
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(table)
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _DGSTREAM_CACHE[key] = cached
-    return cached
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    return session_memo(spark, ("q266_dgstream",), (), build)
 
 
 # ------------------------------------------------------------------ q193
@@ -611,7 +609,7 @@ def q196_stream_stream_join_readback(spark, sf_dir):
     replay order and watermark slack are a correctness pair, not a
     tuning knob (tests/test_streaming_joins.py pins the hash-replay/
     wide-watermark variant).  Inner joins emit eagerly, so
-    processAllAvailable() converges without a drain sentinel.
+    ``drain`` converges without a sentinel wave.
 
     Scale shape: state is bounded by watermark + the 1-hour range
     bound — each side buffers only rows whose join window the opposite
@@ -628,15 +626,8 @@ def q196_stream_stream_join_readback(spark, sf_dir):
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ssjoin")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "ssjoin_readback",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "ssjoin_readback")
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         joined = stream_stream_inner_join(
@@ -647,20 +638,18 @@ def q196_stream_stream_join_readback(spark, sf_dir):
             max_lag="1 hour",
             watermark="2 days",
         )
-        table = f"q196_ssj_{abs(hash(key)) % 10**9}"
-        q = (
+        table = f"q196_ssj_{abs(hash(sf_dir)) % 10**9}"
+        writer = (
             joined.writeStream.outputMode("append")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        q = start_stream(spark, writer, replay)
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q196_ssjoin", sf_dir), (sf_dir,), build)
     lag = F.expr("unix_micros(r_ts) - unix_micros(l_ts)")
     return (
         cached.select(
@@ -778,23 +767,16 @@ def q268_jsonl_write_readback(spark, sf_dir):
     input partitions (4 overwrite + 3 append tasks here), commit cost
     = one driver-side rename pass + one manifest write, readback =
     one file-per-partition parallel scan; nothing but commit messages
-    (file name + row count) ever reaches the driver.  Run-once per
-    (app, sf) with a localCheckpoint readback — the streaming rows'
-    cache discipline."""
+    (file name + row count) ever reaches the driver.  Run once per
+    session and fixture version (``session_memo``) with a
+    localCheckpoint readback, like the streaming rows."""
     from multi_threaded_mapreduce_framework_spark.sources import (
         register_python_sources,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "jsonl_write")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build():
         register_python_sources(spark)
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "jsonl_write",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "jsonl_write")
         out = os.path.join(base, "corpus")
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang", "source", "n_chars"
@@ -824,7 +806,7 @@ def q268_jsonl_write_readback(spark, sf_dir):
             .option("path", out)
             .load()
         )
-        cached = (
+        return (
             back.groupBy("lang", "source")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -835,11 +817,31 @@ def q268_jsonl_write_readback(spark, sf_dir):
             )
             .localCheckpoint()
         )
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+
+    return session_memo(spark, ("q268_jsonl_write", sf_dir), (sf_dir,), build)
 
 
 # ------------------------------------------------------------------ q273
+def _join_sentinels(spark, replay: str, days_ahead: int) -> None:
+    """Append a far-future click+purchase pair (negative user_ids) to the
+    q273/q275 replay through the stamped-mtime path, so the listing
+    order stays pinned."""
+    t0 = datetime.datetime(2025, 1, 1) + datetime.timedelta(days=days_ahead)
+    rows = [
+        (-1, t0, -1, "click", 0.0, "{}"),
+        (-2, t0 + datetime.timedelta(hours=6), -2, "purchase", 0.0, "{}"),
+    ]
+    seen = set(_data_files(replay))
+    schema = spark.read.parquet(replay).schema
+    sdf = spark.createDataFrame(
+        rows,
+        "user_id bigint, ts timestamp, event_id bigint,"
+        " event_type string, value double, props string",
+    ).select(*schema.fieldNames())  # replay's column order
+    sdf.coalesce(1).write.mode("append").parquet(replay)
+    bump_new_file_mtimes(replay, seen)
+
+
 @register(
     "q273_stream_left_join_readback",
     tier="T2",
@@ -880,8 +882,9 @@ def q273_stream_left_join_readback(spark, sf_dir):
     the stamped-mtime replay path: the first advances the watermark
     past every real event, the second triggers the batch in which the
     expired left state emits) — the same flush a production backfill
-    performs; ``tools/check_streaming.py::
-    ss_left_join_flushes_after_watermark`` pins the set-equality form,
+    performs; ``tests/test_streaming_joins.py::
+    test_left_outer_join_flushes_after_watermark`` pins the
+    set-equality form,
     this row pins the hash-gated census.  Sentinel rows carry negative
     user_ids and are filtered before the census (the batch oracle
     never sees them).
@@ -893,27 +896,16 @@ def q273_stream_left_join_readback(spark, sf_dir):
     table costs no second scan of the click stream.  Lag sums in
     integer micros keep the census bit-exact vs batch.
     """
-    import datetime
-
     from multi_threaded_mapreduce_framework_spark.streaming import (
         events_stream,
         stream_stream_left_join,
     )
     from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        _data_files,
-        bump_new_file_mtimes,
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ssljoin")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "ssljoin_readback",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "ssljoin_readback")
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         joined = stream_stream_left_join(
@@ -924,45 +916,24 @@ def q273_stream_left_join_readback(spark, sf_dir):
             max_lag="1 hour",
             watermark="2 days",
         )
-
-        def write_sentinels(days_ahead: int) -> None:
-            # far-future click+purchase pair (negative user_ids), through
-            # the stamped-mtime path so the listing order stays pinned
-            t0 = datetime.datetime(2025, 1, 1) + datetime.timedelta(
-                days=days_ahead
-            )
-            rows = [
-                (-1, t0, -1, "click", 0.0, "{}"),
-                (-2, t0 + datetime.timedelta(hours=6), -2, "purchase", 0.0, "{}"),
-            ]
-            seen = set(_data_files(replay))
-            schema = spark.read.parquet(replay).schema
-            sdf = spark.createDataFrame(
-                rows,
-                "user_id bigint, ts timestamp, event_id bigint,"
-                " event_type string, value double, props string",
-            ).select(*schema.fieldNames())  # replay's column order
-            sdf.coalesce(1).write.mode("append").parquet(replay)
-            bump_new_file_mtimes(replay, seen)
-
-        table = f"q273_ssl_{abs(hash(key)) % 10**9}"
-        q = (
+        table = f"q273_ssl_{abs(hash(sf_dir)) % 10**9}"
+        writer = (
             joined.writeStream.outputMode("append")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
-        try:
-            q.processAllAvailable()
-            write_sentinels(0)  # watermark past every real event
-            q.processAllAvailable()
-            write_sentinels(30)  # the batch in which expired state emits
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        q = start_stream(spark, writer, replay)
+        # the first wave moves the watermark past every real event; the
+        # second triggers the batch in which the expired state emits
+        drain(
+            q,
+            lambda: _join_sentinels(spark, replay, 0),
+            lambda: _join_sentinels(spark, replay, 30),
+        )
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q273_ssljoin", sf_dir), (sf_dir,), build)
     lag = F.expr(
         "CASE WHEN r_event IS NULL THEN NULL"
         " ELSE unix_micros(r_ts) - unix_micros(l_ts) END"
@@ -1046,15 +1017,8 @@ def q274_stream_static_enrich_readback(spark, sf_dir):
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ssenrich")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "ssenrich_readback",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "ssenrich_readback")
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         dim = (
@@ -1069,20 +1033,18 @@ def q274_stream_static_enrich_readback(spark, sf_dir):
             stream["user_id"] % 10 == dim["n_nationkey"],
             "left_outer",
         ).select("user_id", "event_id", "value", "n_name")
-        table = f"q274_sse_{abs(hash(key)) % 10**9}"
-        q = (
+        table = f"q274_sse_{abs(hash(sf_dir)) % 10**9}"
+        writer = (
             enriched.writeStream.outputMode("append")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        q = start_stream(spark, writer, replay)
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q274_ssenrich", sf_dir), (sf_dir,), build)
     micro = F.expr("CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
     return (
         cached.select(
@@ -1154,27 +1116,16 @@ def q275_stream_full_join_readback(spark, sf_dir):
     event accounted for exactly once: matched, click-only, or
     purchase-only — the three rows of a daily reconciliation report).
     """
-    import datetime
-
     from multi_threaded_mapreduce_framework_spark.streaming import (
         events_stream,
         stream_stream_full_join,
     )
     from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        _data_files,
-        bump_new_file_mtimes,
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ssfjoin")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "ssfjoin_readback",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "ssfjoin_readback")
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         joined = stream_stream_full_join(
@@ -1185,43 +1136,22 @@ def q275_stream_full_join_readback(spark, sf_dir):
             max_lag="1 hour",
             watermark="2 days",
         )
-
-        def write_sentinels(days_ahead: int) -> None:
-            t0 = datetime.datetime(2025, 1, 1) + datetime.timedelta(
-                days=days_ahead
-            )
-            rows = [
-                (-1, t0, -1, "click", 0.0, "{}"),
-                (-2, t0 + datetime.timedelta(hours=6), -2, "purchase", 0.0, "{}"),
-            ]
-            seen = set(_data_files(replay))
-            schema = spark.read.parquet(replay).schema
-            sdf = spark.createDataFrame(
-                rows,
-                "user_id bigint, ts timestamp, event_id bigint,"
-                " event_type string, value double, props string",
-            ).select(*schema.fieldNames())
-            sdf.coalesce(1).write.mode("append").parquet(replay)
-            bump_new_file_mtimes(replay, seen)
-
-        table = f"q275_ssf_{abs(hash(key)) % 10**9}"
-        q = (
+        table = f"q275_ssf_{abs(hash(sf_dir)) % 10**9}"
+        writer = (
             joined.writeStream.outputMode("append")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
-        try:
-            q.processAllAvailable()
-            write_sentinels(0)
-            q.processAllAvailable()
-            write_sentinels(30)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        q = start_stream(spark, writer, replay)
+        drain(
+            q,
+            lambda: _join_sentinels(spark, replay, 0),
+            lambda: _join_sentinels(spark, replay, 30),
+        )
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q275_ssfjoin", sf_dir), (sf_dir,), build)
     lag = F.expr(
         "CASE WHEN l_event IS NULL OR r_event IS NULL THEN NULL"
         " ELSE unix_micros(r_ts) - unix_micros(l_ts) END"
@@ -1314,15 +1244,8 @@ def q276_stream_semi_join_readback(spark, sf_dir):
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "sssemi")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "sssemi_readback",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "sssemi_readback")
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         joined = stream_stream_semi_join(
@@ -1333,20 +1256,18 @@ def q276_stream_semi_join_readback(spark, sf_dir):
             max_lag="1 hour",
             watermark="2 days",
         )
-        table = f"q276_sss_{abs(hash(key)) % 10**9}"
-        q = (
+        table = f"q276_sss_{abs(hash(sf_dir)) % 10**9}"
+        writer = (
             joined.writeStream.outputMode("append")
             .format("memory")
             .queryName(table)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        q = start_stream(spark, writer, replay)
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q276_sssemi", sf_dir), (sf_dir,), build)
     return (
         cached.select(
             F.col("l_user").alias("user_id"),

@@ -42,6 +42,7 @@ from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.sources import (
     layout_tag,
     load_table,
+    session_memo,
     spread_small_scan,
 )
 
@@ -49,10 +50,6 @@ MINHASH_K = 16
 LSH_BANDS = 4
 LSH_ROWS = 4
 
-# q117's resident corpus band index, keyed by (applicationId, sf_dir)
-# exactly like t2_cluster._PAIR_CACHE: the applicationId key cannot
-# resurrect checkpoint blocks from a dead context.
-_CORPUS_INDEX_CACHE: dict = {}
 JACCARD_THRESHOLD = 0.5
 COSINE_NEARDUP_THRESHOLD = 0.4
 ANN_PLANES = 4
@@ -644,10 +641,11 @@ def q117_incremental_dedup(spark, sf_dir):
     than a full pair shuffle (one exchange saved; verified identical
     output).
 
-    Within one session the layout read-backs are kept hot (module
-    cache + localCheckpoint, the q94-family ``_PAIR_CACHE``
-    discipline): a long-running ingest service keeps its band index
-    resident; only the first call in a session pays the read.
+    Within one session the layout read-backs are kept hot
+    (``session_memo`` + localCheckpoint, the q94-family
+    ``minhash_pairs`` discipline): a long-running ingest service keeps
+    its band index resident; only the first call in a session pays the
+    read.
     """
     import os
     import tempfile
@@ -671,9 +669,7 @@ def q117_incremental_dedup(spark, sf_dir):
         )
 
     # --- corpus side: materialized once per session with the corpus ---
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CORPUS_INDEX_CACHE.get(cache_key)
-    if cached is None:
+    def build():
         tag = layout_tag(spark, sf_dir)
         base = os.path.join(
             tempfile.gettempdir(), "mtmrf_layout", tag, "corpus_dedup"
@@ -689,12 +685,14 @@ def q117_incremental_dedup(spark, sf_dir):
             ).localCheckpoint()
             corpus_sh.write.mode("overwrite").parquet(sh_dir)
             _bands(corpus_sh).write.mode("overwrite").parquet(bands_dir)
-        cached = (
+        return (
             spark.read.parquet(bands_dir).localCheckpoint(),
             spark.read.parquet(sh_dir).localCheckpoint(),
         )
-        _CORPUS_INDEX_CACHE[cache_key] = cached
-    old_bands, old_sh = cached
+
+    old_bands, old_sh = session_memo(
+        spark, ("q117_corpus_index", sf_dir), (sf_dir,), build
+    )
 
     # --- incoming batch: the only side whose sketches are computed now ---
     batch_sh = _shingles(docs.filter(F.col("doc_id") % 5 == 0)).localCheckpoint()

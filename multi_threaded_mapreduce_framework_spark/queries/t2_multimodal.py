@@ -20,15 +20,14 @@ content unchanged.)
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.sources import (
-    file_stamp,
     load_table,
+    session_memo,
     spread_small_scan,
 )
 
@@ -40,26 +39,11 @@ from multi_threaded_mapreduce_framework_spark.sources import (
 # rows/task), and a 20x fixture moved the optimum to cores/2
 # (100k / 16 = 6250).  ~600 rows/task reproduces both optima within
 # ~6%.  The row count comes from ONE parquet-metadata count per plan
-# and input-file version — memoized so the suite pays it once per table,
-# re-counted when a table is rewritten, and irrelevant on production
-# inputs where the scan already has enough splits to no-op the spread
-# entirely.
+# and input-file version — memoized (``session_memo``) so the suite pays
+# it once per table, re-counted when a table is rewritten, and
+# irrelevant on production inputs where the scan already has enough
+# splits to no-op the spread entirely.
 _SPREAD_ROWS_PER_TASK = 600
-_ROWCOUNT_MEMO: OrderedDict[tuple, int] = OrderedDict()
-_ROWCOUNT_MEMO_MAX = 64
-
-
-def _input_stamp(df) -> tuple | None:
-    """``file_stamp`` of every file ``df`` reads; ``None`` when one is
-    not a local file, so its version cannot be checked."""
-    stamps = []
-    for uri in df.inputFiles():
-        u = urlparse(uri)
-        st = file_stamp(unquote(u.path)) if u.scheme in ("", "file") else None
-        if st is None:
-            return None
-        stamps.append(st)
-    return tuple(stamps)
 
 
 def _spread_chain(df):
@@ -69,15 +53,17 @@ def _spread_chain(df):
     production inputs are untouched."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    stamp = _input_stamp(df)
-    key = (df.semanticHash(), stamp)
-    rows = _ROWCOUNT_MEMO.get(key)
-    if rows is None:
-        rows = df.count()  # parquet-footer count: one tiny metadata job
-        if stamp is not None:
-            _ROWCOUNT_MEMO[key] = rows
-            if len(_ROWCOUNT_MEMO) > _ROWCOUNT_MEMO_MAX:
-                _ROWCOUNT_MEMO.popitem(last=False)
+    # a non-local file keeps its URI, which has no stamp: never memoized
+    files = []
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        files.append(unquote(u.path) if u.scheme in ("", "file") else uri)
+    rows = session_memo(
+        spark,
+        ("spread_chain_rows", df.semanticHash()),
+        files,
+        df.count,  # parquet-footer count: one tiny metadata job
+    )
     n = min(cores, max(2, -(-rows // _SPREAD_ROWS_PER_TASK)))
     return spread_small_scan(df, target=n)
 

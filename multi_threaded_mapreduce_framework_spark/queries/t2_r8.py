@@ -40,15 +40,15 @@ rubric under the standard oracle conventions (FIXTURES.md).
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.sources import (
-    layout_tag,
+    fresh_layout_dir,
     load_table,
+    session_memo,
     spread_small_scan,
 )
 
@@ -264,9 +264,6 @@ def q239_matryoshka_truncation(spark, sf_dir):
 _OPT_FILES_PER_PART = 8
 _OPT_SMALL_FILES = 32
 
-# (applicationId, sf_dir) -> census DataFrame; the rewrite ran once
-_OPT_CACHE: dict = {}
-
 
 @register(
     "q240_optimize_compaction_census",
@@ -318,49 +315,41 @@ def q240_optimize_compaction_census(spark, sf_dir):
         compact_parquet_dir_rows,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "optimize")
-    cached = _OPT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "mtmrf_layout",
-        layout_tag(spark, sf_dir),
-        "optimize_census",
-    )
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    ev.repartition(_OPT_SMALL_FILES).write.mode("overwrite").partitionBy(
-        "event_type"
-    ).parquet(base)
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "optimize_census")
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type"
+        )
+        ev.repartition(_OPT_SMALL_FILES).write.mode("overwrite").partitionBy(
+            "event_type"
+        ).parquet(base)
 
-    def _optimize_one(d: str) -> tuple:
-        part_dir = os.path.join(base, d)
-        et = _urlparse.unquote(d.split("=", 1)[1])
-        n = spark.read.parquet(part_dir).count()
-        target = _math.ceil(n / _OPT_FILES_PER_PART)
-        planned = _math.ceil(n / target)
-        if len(_parquet_files(part_dir)) < planned:
-            raise RuntimeError(
-                f"small-file layout under {part_dir} has fewer files than "
-                f"the plan ({planned}) — cannot compact upward"
-            )
-        compact_parquet_dir_rows(spark, part_dir, target_rows=target)
-        n_after = spark.read.parquet(part_dir).count()
-        files_after = len(_parquet_files(part_dir))
-        return (et, int(n_after), int(files_after))
+        def _optimize_one(d: str) -> tuple:
+            part_dir = os.path.join(base, d)
+            et = _urlparse.unquote(d.split("=", 1)[1])
+            n = spark.read.parquet(part_dir).count()
+            target = _math.ceil(n / _OPT_FILES_PER_PART)
+            planned = _math.ceil(n / target)
+            if len(_parquet_files(part_dir)) < planned:
+                raise RuntimeError(
+                    f"small-file layout under {part_dir} has fewer files than "
+                    f"the plan ({planned}) — cannot compact upward"
+                )
+            compact_parquet_dir_rows(spark, part_dir, target_rows=target)
+            n_after = spark.read.parquet(part_dir).count()
+            files_after = len(_parquet_files(part_dir))
+            return (et, int(n_after), int(files_after))
 
-    parts = sorted(
-        d for d in os.listdir(base) if d.startswith("event_type=")
-    )
-    with ThreadPoolExecutor(max_workers=min(8, max(1, len(parts)))) as pool:
-        rows_out = list(pool.map(_optimize_one, parts))
-    cached = spark.createDataFrame(
-        rows_out, "event_type string, n_rows bigint, files_after bigint"
-    ).localCheckpoint()
-    _OPT_CACHE[key] = cached
-    return cached
+        parts = sorted(
+            d for d in os.listdir(base) if d.startswith("event_type=")
+        )
+        with ThreadPoolExecutor(max_workers=min(8, max(1, len(parts)))) as pool:
+            rows_out = list(pool.map(_optimize_one, parts))
+        return spark.createDataFrame(
+            rows_out, "event_type string, n_rows bigint, files_after bigint"
+        ).localCheckpoint()
+
+    return session_memo(spark, ("q240_optimize", sf_dir), (sf_dir,), build)
 
 
 # ------------------------------------------------------------------ q241

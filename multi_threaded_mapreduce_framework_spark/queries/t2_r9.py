@@ -31,7 +31,6 @@ rubric under the standard oracle conventions (FIXTURES.md).
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
@@ -58,8 +57,9 @@ from multi_threaded_mapreduce_framework_spark.queries.t2_r8 import (
     _OPT_SMALL_FILES,
 )
 from multi_threaded_mapreduce_framework_spark.sources import (
-    layout_tag,
+    fresh_layout_dir,
     load_table,
+    session_memo,
     spread_small_scan,
 )
 
@@ -180,10 +180,6 @@ def q249_banded_threshold_curve(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ q250
-# (applicationId, sf_dir) -> census DataFrame; the rewrite+vacuum ran once
-_VAC_CACHE: dict = {}
-
-
 @register(
     "q250_vacuum_retention_census",
     tier="T2",
@@ -232,58 +228,50 @@ def q250_vacuum_retention_census(spark, sf_dir):
         vacuum_swap_dirs,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "vacuum")
-    cached = _VAC_CACHE.get(key)
-    if cached is not None:
-        return cached
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "mtmrf_layout",
-        layout_tag(spark, sf_dir),
-        "vacuum_census",
-    )
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    ev.repartition(_OPT_SMALL_FILES).write.mode("overwrite").partitionBy(
-        "event_type"
-    ).parquet(base)
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "vacuum_census")
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type"
+        )
+        ev.repartition(_OPT_SMALL_FILES).write.mode("overwrite").partitionBy(
+            "event_type"
+        ).parquet(base)
 
-    def _one(d: str) -> tuple:
-        part_dir = os.path.join(base, d)
-        et = _urlparse.unquote(d.split("=", 1)[1])
-        # plant the two orphan states a crashed swap leaves behind
-        for suffix in ("_compact-fakecrash", "_old-fakecrash"):
-            orphan = f"{part_dir}.{suffix}"
-            os.makedirs(orphan, exist_ok=True)
-            with open(os.path.join(orphan, "part-junk.parquet"), "wb") as f:
-                f.write(b"PAR1 half-written rewrite leftovers")
-        n = spark.read.parquet(part_dir).count()
-        target = _math.ceil(n / _OPT_FILES_PER_PART)
-        planned = _math.ceil(n / target)
-        if len(_parquet_files(part_dir)) < planned:
-            raise RuntimeError(
-                f"small-file layout under {part_dir} has fewer files than "
-                f"the plan ({planned}) — cannot compact upward"
-            )
-        compact_parquet_dir_rows(spark, part_dir, target_rows=target)
-        removed = vacuum_swap_dirs(part_dir, min_age_s=0.0)
-        n_after = spark.read.parquet(part_dir).count()
-        files_after = len(_parquet_files(part_dir))
-        return (et, int(n_after), int(files_after), int(removed))
+        def _one(d: str) -> tuple:
+            part_dir = os.path.join(base, d)
+            et = _urlparse.unquote(d.split("=", 1)[1])
+            # plant the two orphan states a crashed swap leaves behind
+            for suffix in ("_compact-fakecrash", "_old-fakecrash"):
+                orphan = f"{part_dir}.{suffix}"
+                os.makedirs(orphan, exist_ok=True)
+                with open(os.path.join(orphan, "part-junk.parquet"), "wb") as f:
+                    f.write(b"PAR1 half-written rewrite leftovers")
+            n = spark.read.parquet(part_dir).count()
+            target = _math.ceil(n / _OPT_FILES_PER_PART)
+            planned = _math.ceil(n / target)
+            if len(_parquet_files(part_dir)) < planned:
+                raise RuntimeError(
+                    f"small-file layout under {part_dir} has fewer files than "
+                    f"the plan ({planned}) — cannot compact upward"
+                )
+            compact_parquet_dir_rows(spark, part_dir, target_rows=target)
+            removed = vacuum_swap_dirs(part_dir, min_age_s=0.0)
+            n_after = spark.read.parquet(part_dir).count()
+            files_after = len(_parquet_files(part_dir))
+            return (et, int(n_after), int(files_after), int(removed))
 
-    parts = sorted(
-        d for d in os.listdir(base) if d.startswith("event_type=")
-    )
-    with ThreadPoolExecutor(max_workers=min(8, max(1, len(parts)))) as pool:
-        rows_out = list(pool.map(_one, parts))
-    cached = spark.createDataFrame(
-        rows_out,
-        "event_type string, n_rows bigint, files_after bigint,"
-        " orphans_removed bigint",
-    ).localCheckpoint()
-    _VAC_CACHE[key] = cached
-    return cached
+        parts = sorted(
+            d for d in os.listdir(base) if d.startswith("event_type=")
+        )
+        with ThreadPoolExecutor(max_workers=min(8, max(1, len(parts)))) as pool:
+            rows_out = list(pool.map(_one, parts))
+        return spark.createDataFrame(
+            rows_out,
+            "event_type string, n_rows bigint, files_after bigint,"
+            " orphans_removed bigint",
+        ).localCheckpoint()
+
+    return session_memo(spark, ("q250_vacuum", sf_dir), (sf_dir,), build)
 
 
 # ------------------------------------------------------------------ q251

@@ -32,12 +32,19 @@ aliases identical in both engines.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.queries.t2_cluster import _PJ_PARENT_SQL
 from multi_threaded_mapreduce_framework_spark.queries.t2_text import SESSION_GAP_US
-from multi_threaded_mapreduce_framework_spark.sources import load_table
+from multi_threaded_mapreduce_framework_spark.session import scoped_confs
+from multi_threaded_mapreduce_framework_spark.sources import (
+    fresh_layout_dir,
+    load_table,
+    session_memo,
+)
 
 
 # ------------------------------------------------------------------ q198
@@ -343,10 +350,6 @@ def q202_xml_roundtrip_census(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ q270
-# (applicationId, sf_dir) -> census readback; the shredded write ran once
-_SHRED_CACHE: dict = {}
-
-
 @register(
     "q270_variant_shredded_write_census",
     tier="T2",
@@ -393,43 +396,22 @@ def q270_variant_shredded_write_census(spark, sf_dir):
     bounded output domain, under q201's declared k >= 0 domain
     (Spark ``div`` truncates, DuckDB ``//`` floors — they agree only
     on nonnegative k; fixtures pin props.k to 0..99)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "variant_shred")
-    cached = _SHRED_CACHE.get(key)
-    if cached is None:
-        import os
-        import tempfile
 
-        from multi_threaded_mapreduce_framework_spark.sources import layout_tag
-
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "variant_shred",
-            "events",
-        )
+    def build():
+        out = os.path.join(fresh_layout_dir(spark, sf_dir, "variant_shred"), "events")
         ev = load_table(spark, sf_dir, "events").selectExpr(
             "event_id", "event_type", "parse_json(props) AS v"
         )
-        prev = {
-            c: spark.conf.get(c, None)
-            for c in (
-                "spark.sql.variant.writeShredding.enabled",
-                "spark.sql.variant.inferShreddingSchema",
-            )
-        }
-        try:
-            spark.conf.set("spark.sql.variant.writeShredding.enabled", "true")
-            spark.conf.set("spark.sql.variant.inferShreddingSchema", "true")
+        with scoped_confs(
+            spark,
+            {
+                "spark.sql.variant.writeShredding.enabled": "true",
+                "spark.sql.variant.inferShreddingSchema": "true",
+            },
+        ):
             ev.write.mode("overwrite").parquet(out)
-        finally:
-            for c, val in prev.items():
-                if val is None:
-                    spark.conf.unset(c)
-                else:
-                    spark.conf.set(c, val)
         back = spark.read.parquet(out)
-        cached = (
+        return (
             back.select(
                 "event_id",
                 "event_type",
@@ -444,8 +426,8 @@ def q270_variant_shredded_write_census(spark, sf_dir):
             )
             .localCheckpoint()
         )
-        _SHRED_CACHE[key] = cached
-    return cached
+
+    return session_memo(spark, ("q270_variant_shred", sf_dir), (sf_dir,), build)
 
 
 # ------------------------------------------------------------------ q272

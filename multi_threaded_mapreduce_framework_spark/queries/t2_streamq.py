@@ -18,17 +18,17 @@ verdict (item 7).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
-from multi_threaded_mapreduce_framework_spark.sources import layout_tag, read_parquet
-from multi_threaded_mapreduce_framework_spark.streaming.windowed import start_stream
-
-# (applicationId, sf_dir) -> state_dir whose stream already ran this
-# session.  Same cache discipline as t2_cluster._PAIR_CACHE: the
-# application id key cannot resurrect state from a dead context, and a
-# re-run within one session reuses its own completed stream run.
-_MATVIEW_STATE_CACHE: dict = {}
+from multi_threaded_mapreduce_framework_spark.sources import (
+    fresh_layout_dir,
+    read_parquet,
+    session_memo,
+)
+from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+    drain,
+    start_stream,
+)
 
 # The state-v2 (transformWithStateInPandas) queries need RocksDB; it is
 # scoped to their own start (start_stream), never left on the session.
@@ -80,15 +80,8 @@ def q186_bitmap_matview_readback(spark, sf_dir):
         start_bitmap_matview,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    state_dir = _MATVIEW_STATE_CACHE.get(key)
-    if state_dir is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "bitmap_matview",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "bitmap_matview")
         wire = os.path.join(base, "wire")
         state_dir = os.path.join(base, "state")
         ckpt = os.path.join(base, "ckpt")
@@ -100,15 +93,14 @@ def q186_bitmap_matview_readback(spark, sf_dir):
             state_dir,
             ckpt,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drain(q)
         # fold the per-batch word partials into a base snapshot: the
         # readback below exercises the compacted path; pre-compaction
         # multi-batch merge equality is pinned in tests/test_matview.py
         compact_bitmap_matview(spark, state_dir, ["event_type"])
-        _MATVIEW_STATE_CACHE[key] = state_dir
+        return state_dir
+
+    state_dir = session_memo(spark, ("q186_bitmap_matview", sf_dir), (sf_dir,), build)
     return read_bitmap_matview(spark, state_dir, ["event_type"]).withColumnRenamed(
         "distinct_ids", "distinct_users"
     )
@@ -158,15 +150,8 @@ def q188_incremental_matview_readback(spark, sf_dir):
         start_incremental_matview,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "cnt_sum")
-    state_dir = _MATVIEW_STATE_CACHE.get(key)
-    if state_dir is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "cntsum_matview",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "cntsum_matview")
         wire = os.path.join(base, "wire")
         state_dir = os.path.join(base, "state")
         ckpt = os.path.join(base, "ckpt")
@@ -177,11 +162,10 @@ def q188_incremental_matview_readback(spark, sf_dir):
             state_dir,
             ckpt,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        _MATVIEW_STATE_CACHE[key] = state_dir
+        drain(q)
+        return state_dir
+
+    state_dir = session_memo(spark, ("q188_cnt_sum_matview", sf_dir), (sf_dir,), build)
     return read_matview(spark, state_dir, ["event_type"])
 
 
@@ -233,22 +217,15 @@ def q189_tws_state_readback(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tws")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build():
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_readback",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "tws_readback")
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         stream = events_stream(spark, replay).select(
             "user_id", F.expr(_MICRO_SQL.replace("value", "value")).alias("vm")
         )
-        table = f"q189_tws_{abs(hash(key)) % 10**9}"
+        table = f"q189_tws_{abs(hash(sf_dir)) % 10**9}"
         writer = (
             running_user_totals_tws_micro(stream)
             .writeStream.outputMode("update")
@@ -257,12 +234,10 @@ def q189_tws_state_readback(spark, sf_dir):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay, _ROCKSDB)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q189_tws_totals", sf_dir), (sf_dir,), build)
     return cached.groupBy("user_id").agg(
         F.max("cnt").cast("bigint").alias("cnt"),
         F.expr("max_by(sum_micro, cnt)").cast("bigint").alias("sum_micro"),
@@ -328,16 +303,10 @@ def q190_tws_timer_sessions(spark, sf_dir):
     )
 
     SENTINEL = 999_999_999
-    key = (spark.sparkContext.applicationId, sf_dir, "tws_timer")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+
+    def build():
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_timer",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "tws_timer")
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
         ev = read_parquet(spark, replay)
@@ -360,7 +329,7 @@ def q190_tws_timer_sessions(spark, sf_dir):
         stream = events_stream(spark, replay).selectExpr(
             "user_id", "ts", "unix_micros(ts) AS us", "event_id"
         )
-        table = f"q190_tws_{abs(hash(key)) % 10**9}"
+        table = f"q190_tws_{abs(hash(sf_dir)) % 10**9}"
         writer = (
             session_finalizer_tws(stream, gap_s=1800)
             .writeStream.outputMode("append")
@@ -369,12 +338,10 @@ def q190_tws_timer_sessions(spark, sf_dir):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay, _ROCKSDB)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q190_tws_timer", sf_dir), (sf_dir,), build)
     return cached.filter(F.col("user_id") != SENTINEL).select(
         "user_id", "start_us", "end_us", "n"
     )
@@ -439,16 +406,9 @@ def q231_tws_liststate_lastk(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tws_list")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build():
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_list",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "tws_list")
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         stream = events_stream(spark, replay).selectExpr(
@@ -457,7 +417,7 @@ def q231_tws_liststate_lastk(spark, sf_dir):
             "event_id",
             f"coalesce({_MICRO_SQL}, 0) AS vm",
         )
-        table = f"q231_tws_{abs(hash(key)) % 10**9}"
+        table = f"q231_tws_{abs(hash(sf_dir)) % 10**9}"
         writer = (
             recent_values_tws(stream, k=3)
             .writeStream.outputMode("update")
@@ -466,12 +426,10 @@ def q231_tws_liststate_lastk(spark, sf_dir):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay, _ROCKSDB)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q231_tws_list", sf_dir), (sf_dir,), build)
     return cached.groupBy("user_id", "pos").agg(
         F.expr("max_by(vm, seen)").cast("bigint").alias("vm")
     )
@@ -520,20 +478,13 @@ def q237_tws_mapstate_census(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tws_map")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build():
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_map",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "tws_map")
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         stream = events_stream(spark, replay).select("user_id", "event_type")
-        table = f"q237_tws_{abs(hash(key)) % 10**9}"
+        table = f"q237_tws_{abs(hash(sf_dir)) % 10**9}"
         writer = (
             event_type_census_tws(stream)
             .writeStream.outputMode("update")
@@ -542,12 +493,10 @@ def q237_tws_mapstate_census(spark, sf_dir):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay, _ROCKSDB)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q237_tws_map", sf_dir), (sf_dir,), build)
     return cached.groupBy("user_id", "event_type").agg(
         F.max("cnt").cast("bigint").alias("cnt")
     )
@@ -599,18 +548,11 @@ def q242_tws_initial_state(spark, sf_dir):
         bootstrapped_user_totals_tws,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tws_init")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build():
         from multi_threaded_mapreduce_framework_spark.sources import load_table
 
         ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_init",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "tws_init")
         ev = load_table(spark, sf_dir, "events")
         snapshot = (
             ev.filter(F.expr("event_id % 2 = 0"))
@@ -628,7 +570,7 @@ def q242_tws_initial_state(spark, sf_dir):
         stream = events_stream(spark, replay).select(
             "user_id", F.expr(_MICRO_SQL).alias("vm")
         )
-        table = f"q242_tws_{abs(hash(key)) % 10**9}"
+        table = f"q242_tws_{abs(hash(sf_dir)) % 10**9}"
         writer = (
             bootstrapped_user_totals_tws(stream, snapshot.groupBy("user_id"))
             .writeStream.outputMode("update")
@@ -637,12 +579,10 @@ def q242_tws_initial_state(spark, sf_dir):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay, _ROCKSDB)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q242_tws_init", sf_dir), (sf_dir,), build)
     return cached.groupBy("user_id").agg(
         F.max("cnt").cast("bigint").alias("cnt"),
         F.expr("max_by(sum_micro, cnt)").cast("bigint").alias("sum_micro"),
@@ -667,7 +607,7 @@ def q244_stream_dedup_readback(spark, sf_dir):
     event_type is hash-gated against the batch census over the
     UN-duplicated fixture: the gate proves the dedup state absorbed
     exactly the duplicate half, no more, no less.  Promotes the
-    dedup-within-stream family (check_streaming's dedup scenarios) to
+    dedup-within-stream family (tests/test_streaming.py's dedup tests) to
     the oracle-declared inventory — the ingest-side sibling of q25's
     batch dedup and the ninth streaming-backed declared row.
 
@@ -686,21 +626,14 @@ def q244_stream_dedup_readback(spark, sf_dir):
         stream_dedup,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dedup_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build():
         from multi_threaded_mapreduce_framework_spark.sources import load_table
         from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
             _data_files,
             bump_new_file_mtimes,
         )
 
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "dedup_readback",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "dedup_readback")
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         pre_wave = set(_data_files(replay))
@@ -712,7 +645,7 @@ def q244_stream_dedup_readback(spark, sf_dir):
             events_stream(spark, replay).select("event_id", "event_type"),
             ["event_id"],
         )
-        table = f"q244_dedup_{abs(hash(key)) % 10**9}"
+        table = f"q244_dedup_{abs(hash(sf_dir)) % 10**9}"
         writer = (
             stream.writeStream.outputMode("append")
             .format("memory")
@@ -720,12 +653,10 @@ def q244_stream_dedup_readback(spark, sf_dir):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q244_dedup", sf_dir), (sf_dir,), build)
     return cached.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -759,8 +690,8 @@ def q248_stream_dedup_watermark(spark, sf_dir):
     per window is bounded by ingest rate x delay, and the state store
     stays flat as history grows — the property q244's unbounded
     variant (correct only while ALL keys fit state) cannot offer.
-    Checked as a timing-free scenario in tools/check_streaming.py;
-    this row adds the driver hash gate."""
+    Eviction itself is law-tested in tests/test_streaming.py; this row
+    adds the driver hash gate."""
     import pyspark.sql.functions as F
 
     from multi_threaded_mapreduce_framework_spark.sources import load_table
@@ -770,20 +701,13 @@ def q248_stream_dedup_watermark(spark, sf_dir):
         stream_dedup_within_watermark,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dedup_wm_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build():
         from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
             _data_files,
             bump_new_file_mtimes,
         )
 
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "dedup_wm_readback",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "dedup_wm_readback")
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         pre_wave = set(_data_files(replay))
@@ -801,7 +725,7 @@ def q248_stream_dedup_watermark(spark, sf_dir):
             ["event_id"],
             watermark="3650 days",
         )
-        table = f"q248_dedup_wm_{abs(hash(key)) % 10**9}"
+        table = f"q248_dedup_wm_{abs(hash(sf_dir)) % 10**9}"
         writer = (
             stream.writeStream.outputMode("append")
             .format("memory")
@@ -809,12 +733,10 @@ def q248_stream_dedup_watermark(spark, sf_dir):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    cached = session_memo(spark, ("q248_dedup_wm", sf_dir), (sf_dir,), build)
     return cached.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -836,7 +758,7 @@ def q256_stream_window_census(spark, sf_dir):
     oracle-declared row: 1-hour windows x event_type (count + exact
     integer-micro value sum) computed by a real watermarked
     readStream/writeStream run, hash-gated against the batch
-    date_trunc census.  q24 is the batch form; the streaming checker
+    date_trunc census.  q24 is the batch form; tests/test_streaming.py
     exercises complete-mode convergence; THIS row pins the append-mode
     contract end to end: a window row is emitted EXACTLY ONCE, only
     after the watermark passes its end — the form a production sink
@@ -876,15 +798,9 @@ def _append_window_run(spark, sf_dir, tag, duration, slide):
     )
 
     SENTINEL = 999_999_999
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            tag,
-        )
+
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, tag)
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
         ev = read_parquet(spark, replay)
@@ -928,7 +844,7 @@ def _append_window_run(spark, sf_dir, tag, duration, slide):
                 "sum_micro",
             )
         )
-        table = f"{tag}_{abs(hash(key)) % 10**9}"
+        table = f"{tag}_{abs(hash(sf_dir)) % 10**9}"
         writer = (
             agg.writeStream.outputMode("append")
             .format("memory")
@@ -936,13 +852,10 @@ def _append_window_run(spark, sf_dir, tag, duration, slide):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+        drain(q)
+        return spark.table(table).localCheckpoint()
+
+    return session_memo(spark, ("append_window", tag, sf_dir), (sf_dir,), build)
 
 
 @register(
@@ -1005,7 +918,7 @@ def q262_stream_restart_readback(spark, sf_dir):
     REPLAY chunk 1 into live state nor SKIP the files that arrived
     during downtime).  This is the crash/deploy/upgrade contract every
     production stream relies on; the scenario exists in
-    tests/test_streaming.py and tools/check_streaming.py — this row
+    tests/test_streaming.py — this row
     adds the oracle gate (the q248 promotion discipline).
 
     Mechanics: complete-mode aggregation over a file source; the file-
@@ -1023,23 +936,16 @@ def q262_stream_restart_readback(spark, sf_dir):
     from multi_threaded_mapreduce_framework_spark.sources import load_table
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
 
-    key = (spark.sparkContext.applicationId, sf_dir, "restart_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build():
         from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
             _data_files,
             bump_new_file_mtimes,
         )
 
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "restart_readback",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "restart_readback")
         replay = os.path.join(base, "replay")
         ckpt = os.path.join(base, "ckpt")
-        table = f"q262_restart_{abs(hash(key)) % 10**9}"
+        table = f"q262_restart_{abs(hash(sf_dir)) % 10**9}"
         full = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "ts", "value"
         )
@@ -1063,19 +969,16 @@ def q262_stream_restart_readback(spark, sf_dir):
                 .option("checkpointLocation", ckpt)
             )
             q = start_stream(spark, writer, replay)
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            drain(q)
 
         run_once()  # first half only, then a clean stop
         pre_downtime = set(_data_files(replay))
         second.repartition(2).write.mode("append").parquet(replay)
         bump_new_file_mtimes(replay, pre_downtime)  # downtime arrivals sort after
         run_once()  # NEW query object, same checkpoint: resumes state
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+        return spark.table(table).localCheckpoint()
+
+    return session_memo(spark, ("q262_restart", sf_dir), (sf_dir,), build)
 
 
 @register(
@@ -1092,7 +995,7 @@ def q263_stream_file_sink_readback(spark, sf_dir):
     -> downstream batch readers): a streaming dedup writes append-mode
     parquet through the file sink's transaction log, is STOPPED
     BETWEEN fully-drained waves (the first run drains the original
-    wave with ``processAllAvailable`` before stopping — torn mid-batch
+    wave with ``drain`` before stopping — torn mid-batch
     recovery is q262's axis, not this row's), a full DUPLICATE wave of
     every event arrives during the downtime, and a restarted query
     drains it; the batch READBACK
@@ -1117,20 +1020,13 @@ def q263_stream_file_sink_readback(spark, sf_dir):
         stream_dedup,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "file_sink_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build():
         from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
             _data_files,
             bump_new_file_mtimes,
         )
 
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "file_sink_readback",
-        )
+        base = fresh_layout_dir(spark, sf_dir, "file_sink_readback")
         replay = os.path.join(base, "replay")
         ckpt = os.path.join(base, "ckpt")
         sink = os.path.join(base, "sink")
@@ -1150,10 +1046,7 @@ def q263_stream_file_sink_readback(spark, sf_dir):
                 .option("checkpointLocation", ckpt)
             )
             q = start_stream(spark, writer, replay)
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            drain(q)
 
         run_once()  # the original wave lands in the sink
         pre_wave = set(_data_files(replay))
@@ -1162,14 +1055,14 @@ def q263_stream_file_sink_readback(spark, sf_dir):
         ).repartition(3).write.mode("append").parquet(replay)
         bump_new_file_mtimes(replay, pre_wave)  # duplicate wave sorts after
         run_once()  # restart: recovered dedup state absorbs the wave
-        cached = (
+        return (
             spark.read.parquet(sink)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
             .localCheckpoint()
         )
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+
+    return session_memo(spark, ("q263_file_sink", sf_dir), (sf_dir,), build)
 
 
 @register(
@@ -1221,15 +1114,8 @@ def q264_stream_upsert_readback(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "upsert_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "upsert_readback",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "upsert_readback")
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=4)
         stream = events_stream(spark, replay).selectExpr(
@@ -1280,18 +1166,15 @@ def q264_stream_upsert_readback(spark, sf_dir):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drain(q)
         final = _state_versions()
-        cached = (
+        return (
             spark.read.parquet(os.path.join(base, f"state_v{max(final)}"))
             .select("user_id", F.col("vm").cast("bigint").alias("vm"))
             .localCheckpoint()
         )
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+
+    return session_memo(spark, ("q264_upsert", sf_dir), (sf_dir,), build)
 
 
 @register(
@@ -1334,15 +1217,8 @@ def q265_stream_update_changelog(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "update_changelog")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "update_changelog",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "update_changelog")
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=4)
         agg = (
@@ -1353,7 +1229,7 @@ def q265_stream_update_changelog(spark, sf_dir):
                 F.sum(F.expr(_MICRO_SQL)).cast("bigint").alias("sum_micro"),
             )
         )
-        table = f"q265_changelog_{abs(hash(key)) % 10**9}"
+        table = f"q265_changelog_{abs(hash(sf_dir)) % 10**9}"
         writer = (
             agg.writeStream.outputMode("update")
             .format("memory")
@@ -1361,20 +1237,17 @@ def q265_stream_update_changelog(spark, sf_dir):
             .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
         q = start_stream(spark, writer, replay)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drain(q)
         w = W.partitionBy("user_id").orderBy(F.desc("cnt"))
-        cached = (
+        return (
             spark.table(table)
             .withColumn("rn", F.row_number().over(w))
             .filter("rn = 1")
             .select("user_id", "cnt", "sum_micro")
             .localCheckpoint()
         )
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+
+    return session_memo(spark, ("q265_changelog", sf_dir), (sf_dir,), build)
 
 
 # ------------------------------------------------------------------ q269
@@ -1456,10 +1329,7 @@ def run_session_stream(spark, replay, ckpt, table):
         .option("checkpointLocation", ckpt)
     )
     q = start_stream(spark, writer, replay)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(q)
     return spark.table(table)
 
 
@@ -1499,22 +1369,16 @@ def q269_stream_session_census(spark, sf_dir):
     the streaming form's state is the live frontier only)."""
     import pyspark.sql.functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir, "session_census")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "session_census",
-        )
+    def build():
+        base = fresh_layout_dir(spark, sf_dir, "session_census")
         replay = os.path.join(base, "replay")
         build_session_replay(spark, sf_dir, replay)
-        table = f"q269_session_{abs(hash(key)) % 10**9}"
-        cached = run_session_stream(
+        table = f"q269_session_{abs(hash(sf_dir)) % 10**9}"
+        return run_session_stream(
             spark, replay, os.path.join(base, "ckpt"), table
         ).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+
+    cached = session_memo(spark, ("q269_session_census", sf_dir), (sf_dir,), build)
     return cached.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
         F.sum("n_ev").cast("bigint").alias("n_events"),

@@ -15,6 +15,8 @@ actual size, and nothing below pins a plan to local mode.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -100,3 +102,20 @@ def ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on this build — loader falls back per-read
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the ``with`` body only; each
+    key's previous value (or its absence) is restored on exit."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

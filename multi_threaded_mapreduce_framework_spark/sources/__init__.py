@@ -1,10 +1,12 @@
 from multi_threaded_mapreduce_framework_spark.sources.fixtures import (
     TABLES,
     file_stamp,
+    fresh_layout_dir,
     layout_tag,
     load_table,
     read_parquet,
     register_views,
+    session_memo,
     spread_small_scan,
     table_path,
 )
@@ -17,10 +19,12 @@ from multi_threaded_mapreduce_framework_spark.sources.pydatasource import (
 __all__ = [
     "TABLES",
     "file_stamp",
+    "fresh_layout_dir",
     "layout_tag",
     "load_table",
     "read_parquet",
     "register_views",
+    "session_memo",
     "spread_small_scan",
     "table_path",
     "DocGenDataSource",

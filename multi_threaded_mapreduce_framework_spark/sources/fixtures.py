@@ -18,14 +18,19 @@ layouts the driver has generated across rounds:
 Fixture and stream-replay reads go through ``read_parquet``: a plain
 ``spark.read.parquet`` runs a one-task footer-merge job to infer the
 schema on every call, so the schema Spark inferred on the first read is
-memoized and later reads pin it (zero jobs). The memo holds schemas
-only; every scan still runs.
+memoized (``session_memo``) and later reads pin it (zero jobs). The memo
+holds schemas only; every scan still runs.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+import threading
 from collections import OrderedDict
+from typing import Callable, Iterable, TypeVar
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -62,8 +67,12 @@ _SCHEMA_CONFS = (
     "spark.sql.caseSensitive",
     "spark.sql.parquet.mergeSchema",
 )
-_SCHEMA_MEMO: OrderedDict[tuple, StructType] = OrderedDict()
-_SCHEMA_MEMO_MAX = 256
+# session_memo's entries, (applicationId, key, input stamps) -> value,
+# least recently used first
+_MEMO: OrderedDict[tuple, object] = OrderedDict()
+_MEMO_SIZE = 256
+_MEMO_LOCK = threading.Lock()
+T = TypeVar("T")
 
 
 def _visible(name: str) -> bool:
@@ -96,25 +105,58 @@ def file_stamp(path: str) -> tuple | None:
     return tuple(sorted(out))
 
 
+def session_memo(
+    spark: SparkSession, key: tuple, inputs: Iterable[str], build: Callable[[], T]
+) -> T:
+    """``build()``, run once per ``key`` and version of ``inputs`` in this
+    Spark application; later calls return the first result.
+
+    A version is the ``file_stamp`` of each input path, so rewriting an
+    input misses and rebuilds. When an input has no stamp (missing or
+    not local), ``build()`` runs every time. The memo holds the
+    ``_MEMO_SIZE`` most recently used results and drops them all when
+    ``applicationId`` changes, since a result may hold checkpoint blocks
+    of the old context. ``key`` starts with a name unique to its call
+    site."""
+    stamps = tuple(file_stamp(p) for p in inputs)
+    if None in stamps:
+        return build()
+    app = spark.sparkContext.applicationId
+    entry = (app, key, stamps)
+    with _MEMO_LOCK:
+        if _MEMO and next(iter(_MEMO))[0] != app:
+            _MEMO.clear()
+        if entry in _MEMO:
+            _MEMO.move_to_end(entry)
+            return _MEMO[entry]
+    # built outside the lock: a build may itself read through the memo
+    value = build()
+    with _MEMO_LOCK:
+        _MEMO[entry] = value
+        if len(_MEMO) > _MEMO_SIZE:
+            _MEMO.popitem(last=False)
+    return value
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers the schema once per file
     version: later reads pin the ``StructType`` Spark inferred, and so
-    launch no schema-merge job. Keyed on the absolute path, its
-    ``file_stamp`` and ``_SCHEMA_CONFS``; a missing or non-local path
-    falls through to the plain read (and so to Spark's own error)."""
+    launch no schema-merge job. Memoized on the absolute path and
+    ``_SCHEMA_CONFS``; a missing or non-local path is inferred on every
+    read (and so raises Spark's own error)."""
     local = os.path.abspath(path)
-    stamp = file_stamp(local)
-    if stamp is None:
-        return spark.read.parquet(path)
-    key = (local, stamp, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        df = spark.read.parquet(local)
-        _SCHEMA_MEMO[key] = df.schema
-        if len(_SCHEMA_MEMO) > _SCHEMA_MEMO_MAX:
-            _SCHEMA_MEMO.popitem(last=False)
-        return df
-    return spark.read.schema(schema).parquet(local)
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    inferred = None
+
+    def infer() -> StructType:
+        nonlocal inferred
+        inferred = spark.read.parquet(path)
+        return inferred.schema
+
+    schema = session_memo(spark, ("parquet_schema", local, confs), (local,), infer)
+    # a miss returns the inferring read itself: a second, pinned read
+    # would list the files again
+    return inferred if inferred is not None else spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -171,14 +213,29 @@ def spread_small_scan(
 def layout_tag(spark: SparkSession, sf_dir: str) -> str:
     """Session-unique tag for DERIVED physical layouts (bucketed tables,
     partitioned dirs under the shared tempdir): sf tag + Spark
-    applicationId, so two concurrent sessions over the same sf can
-    never overwrite each other's layout mid-query — the tag is safe in
+    applicationId + a digest of ``file_stamp(sf_dir)``, so two
+    concurrent sessions over the same sf can never overwrite each
+    other's layout mid-query, and a rewritten fixture never reuses a
+    layout derived from its previous version — the tag is safe in
     both catalog identifiers and filesystem paths. Within one session
-    the tag is stable, so a query re-run reuses (overwrites) its own
-    layout rather than accreting copies."""
+    and fixture version the tag is stable, so a query re-run reuses
+    (overwrites) its own layout rather than accreting copies."""
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
-    return f"{sf}_{app}"
+    version = hashlib.sha1(repr(file_stamp(sf_dir)).encode()).hexdigest()[:10]
+    return f"{sf}_{app}_{version}"
+
+
+def fresh_layout_dir(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """``<tempdir>/mtmrf_layout/<layout_tag>/<name>``, emptied: a memoized
+    builder starts from clean state, never from the checkpoint, replay
+    or sink of an earlier build (an evicted memo entry rebuilds in the
+    same directory)."""
+    path = os.path.join(
+        tempfile.gettempdir(), "mtmrf_layout", layout_tag(spark, sf_dir), name
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

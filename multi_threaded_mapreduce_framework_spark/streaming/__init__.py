@@ -28,6 +28,7 @@ from multi_threaded_mapreduce_framework_spark.streaming.stateful import (
     running_user_totals,
 )
 from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+    drain,
     events_stream,
     replay_events,
     run_to_convergence,
@@ -58,6 +59,7 @@ __all__ = [
     "read_matview",
     "start_incremental_matview",
     "running_user_totals",
+    "drain",
     "events_stream",
     "replay_events",
     "run_to_convergence",

@@ -115,7 +115,7 @@ def event_type_census_tws(stream: DataFrame) -> DataFrame:
     per user per micro-batch (update-mode snapshot rows), so the last
     emission per (user, event_type) equals the batch
     ``groupBy(user_id, event_type).count()`` — asserted in
-    tests/test_streaming.py and tools/check_streaming.py.
+    tests/test_streaming.py.
 
     Transport note: every MapState operation here (GetValue,
     ContainsKey, UpdateValue, Iterator paging) is a distinct

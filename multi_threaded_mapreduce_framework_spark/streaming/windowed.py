@@ -33,11 +33,13 @@ from __future__ import annotations
 
 import os
 import time as _time
+from typing import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from multi_threaded_mapreduce_framework_spark.session import scoped_confs
 from multi_threaded_mapreduce_framework_spark.sources import (
     file_stamp,
     load_table,
@@ -167,7 +169,7 @@ def start_stream(
 ) -> StreamingQuery:
     """``writer.start()`` with ``spark.sql.shuffle.partitions`` set to
     ``state_partitions(spark, src_dir)`` and any ``confs`` set, for the
-    start only; the session's own values are restored after it.
+    start only (``scoped_confs``).
 
     The query keeps the scoped values because it runs on a clone of the
     session taken at ``start()``. A restart from the same checkpoint
@@ -177,17 +179,21 @@ def start_stream(
         "spark.sql.shuffle.partitions": str(state_partitions(spark, src_dir)),
         **(confs or {}),
     }
-    saved = {k: spark.conf.get(k, None) for k in scoped}
-    try:
-        for k, v in scoped.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, scoped):
         return writer.start()
+
+
+def drain(q: StreamingQuery, *arrivals: Callable[[], None]) -> None:
+    """Run ``q`` over all input available now, then stop it. Each of
+    ``arrivals`` (e.g. a sentinel wave that advances the watermark)
+    runs after the previous drain, and its input is drained too. The
+    query is stopped even when a batch or an arrival fails."""
+    try:
+        for arrive in (lambda: None, *arrivals):
+            arrive()
+            q.processAllAvailable()
     finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        q.stop()
 
 
 def tumbling_window_counts(stream: DataFrame) -> DataFrame:
@@ -277,14 +283,14 @@ def stream_dedup_within_watermark(
 def run_to_convergence(
     agg: DataFrame, name: str, output_mode: str = "complete"
 ) -> StreamingQuery:
-    """Start a memory-sink query and process all available input; the
-    caller reads the converged result from ``spark.table(name)`` and
-    must ``stop()`` the returned query."""
+    """Start a memory-sink query and ``drain`` it; the caller reads the
+    converged result from ``spark.table(name)``, which outlives the
+    stopped query."""
     q = (
         agg.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
         .start()
     )
-    q.processAllAvailable()
+    drain(q)
     return q

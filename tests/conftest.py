@@ -31,3 +31,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def memo_get(spark):
+    """Look up this session's ``session_memo`` value for ``key`` (the
+    latest input version's); ``None`` when nothing is memoized."""
+    from multi_threaded_mapreduce_framework_spark.sources import fixtures
+
+    def get(key):
+        app = spark.sparkContext.applicationId
+        hits = [v for (a, k, _), v in fixtures._MEMO.items() if (a, k) == (app, key)]
+        return hits[-1] if hits else None
+
+    return get

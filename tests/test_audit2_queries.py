@@ -1,10 +1,12 @@
 """Law-pinning tests for the embedding-audit tier (q226-q228):
 q226's cross-label guarantee and block invariance, q227's margin
-geometry on a separable crafted space, q228's card identities."""
+geometry on a separable crafted space and its named error on vectors of
+another length, q228's card identities."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from multi_threaded_mapreduce_framework_spark.queries import all_queries
 from multi_threaded_mapreduce_framework_spark.queries.t2_audit2 import (
@@ -57,6 +59,19 @@ def test_q227_separable_space_has_positive_margin(spark, tmp_path):
     assert len(out) == 4
     for r in out.values():
         assert r.own_cos == 1.0 and r.other_cos == 0.0 and r.margin == 1.0
+
+
+def test_q227_rejects_vectors_that_are_not_64_dim(spark, tmp_path):
+    """q227's folds read 64 elements: a 65-dim corpus fails the query by
+    name instead of silently dropping the 65th dimension."""
+    rows = [(vid, [1.0 if i == vid % 65 else 0.0 for i in range(65)], vid % 3)
+            for vid in range(12)]
+    d = str(tmp_path / "sf")
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    with pytest.raises(Exception, match="EMBEDDING_DIM_MISMATCH"):
+        QUERIES["q227_class_separability"](spark, d).collect()
 
 
 def test_q228_card_identities(spark, sf_dir):

@@ -63,22 +63,18 @@ def test_winnowing_density_theory(spark, sf_dir):
         assert 0.35 <= r.density <= 0.45, (r.lang, r.density)
 
 
-def test_q196_cache_and_lag_bounds(spark, sf_dir):
+def test_q196_cache_and_lag_bounds(spark, sf_dir, memo_get):
     """The stream runs ONCE per (app, sf) — a second build must reuse
     the session cache — and every attributed pair respects the join's
     range bound: 0 <= min_lag_us and per-user lags sum within
     n_pairs * 1 hour."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
-
     build = QUERIES["q196_stream_stream_join_readback"].builder
     first = {tuple(r) for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "ssjoin")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    key = ("q196_ssjoin", sf_dir)
+    sentinel = memo_get(key)
+    assert sentinel is not None
     second = {tuple(r) for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert memo_get(key) is sentinel, "stream must not re-run"
     assert first == second and first
     hour_us = 3_600 * 1_000_000
     for user_id, n_pairs, n_clicks, n_purchases, sum_lag, min_lag in first:
@@ -86,25 +82,22 @@ def test_q196_cache_and_lag_bounds(spark, sf_dir):
         assert min_lag <= sum_lag <= n_pairs * hour_us
         assert 1 <= n_clicks <= n_pairs and 1 <= n_purchases <= n_pairs
 
-def test_q273_left_join_flushes_and_reconciles(spark, sf_dir):
+def test_q273_left_join_flushes_and_reconciles(spark, sf_dir, memo_get):
     """The left-outer readback census must (a) reuse its session cache,
     (b) really contain NULL-FLUSHED rows (some user has unmatched
     clicks — otherwise the row degenerates to q196), (c) account for
     every click exactly once across matched+unmatched (n_clicks per
     user == that user's raw click count, and n_rows == n_matched +
     n_unmatched), and (d) respect the join's range bound on lags."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
     from multi_threaded_mapreduce_framework_spark.sources import load_table
 
     build = QUERIES["q273_stream_left_join_readback"].builder
     rows = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "ssljoin")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    key = ("q273_ssljoin", sf_dir)
+    sentinel = memo_get(key)
+    assert sentinel is not None
     again = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert memo_get(key) is sentinel, "stream must not re-run"
     assert rows.keys() == again.keys() and rows
 
     clicks = {
@@ -129,24 +122,21 @@ def test_q273_left_join_flushes_and_reconciles(spark, sf_dir):
     assert total_unmatched > 0, "no null-flushed outer rows — gate degenerate"
 
 
-def test_q274_stream_static_enrich_laws(spark, sf_dir):
+def test_q274_stream_static_enrich_laws(spark, sf_dir, memo_get):
     """The stream-static readback must (a) reuse its session cache,
     (b) cover exactly the batch LEFT-join group domain (every nation
     0-7 that user_id%10 hits, plus '<unmatched>' for the 8-9
     residues — the stateless null path really emitted), (c) conserve
     events and users against the raw fixture."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
     from multi_threaded_mapreduce_framework_spark.sources import load_table
 
     build = QUERIES["q274_stream_static_enrich_readback"].builder
     rows = {r.nation: r for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "ssenrich")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    key = ("q274_ssenrich", sf_dir)
+    sentinel = memo_get(key)
+    assert sentinel is not None
     again = {r.nation: r for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert memo_get(key) is sentinel, "stream must not re-run"
     assert rows.keys() == again.keys() and rows
 
     ev = load_table(spark, sf_dir, "events")
@@ -185,7 +175,7 @@ def test_q274_stream_static_enrich_laws(spark, sf_dir):
         assert rows[name].n_events == n and rows[name].n_users == u
 
 
-def test_q275_full_join_reconciles_both_sides(spark, sf_dir):
+def test_q275_full_join_reconciles_both_sides(spark, sf_dir, memo_get):
     """The full-outer readback must (a) reuse its session cache,
     (b) partition every row into matched / click-only / purchase-only,
     (c) account for every click AND every purchase of every user
@@ -193,18 +183,15 @@ def test_q275_full_join_reconciles_both_sides(spark, sf_dir):
     directions (some click-only and some purchase-only rows exist —
     otherwise the row degenerates to q273/q196), (e) respect the lag
     range bound."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
     from multi_threaded_mapreduce_framework_spark.sources import load_table
 
     build = QUERIES["q275_stream_full_join_readback"].builder
     rows = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "ssfjoin")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    key = ("q275_ssfjoin", sf_dir)
+    sentinel = memo_get(key)
+    assert sentinel is not None
     again = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert memo_get(key) is sentinel, "stream must not re-run"
     assert rows.keys() == again.keys() and rows
 
     ev = load_table(spark, sf_dir, "events")
@@ -237,24 +224,20 @@ def test_q275_full_join_reconciles_both_sides(spark, sf_dir):
     assert tot_purchase_only > 0, "no right null-flush — degenerate"
 
 
-def test_q276_semi_join_exactly_once_vs_q273(spark, sf_dir):
+def test_q276_semi_join_exactly_once_vs_q273(spark, sf_dir, memo_get):
     """The semi readback must (a) reuse its session cache, (b) emit
     each converted click EXACTLY once (n_converted == n_distinct),
     (c) agree with q273's census cross-query: per user,
     converted == n_clicks - n_unmatched_clicks (the same replay, the
     same window law, two join modes), and the semi user set is exactly
     the users with at least one match."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
-
     build = QUERIES["q276_stream_semi_join_readback"].builder
     rows = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "sssemi")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    key = ("q276_sssemi", sf_dir)
+    sentinel = memo_get(key)
+    assert sentinel is not None
     again = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert memo_get(key) is sentinel, "stream must not re-run"
     assert rows.keys() == again.keys() and rows
 
     left = {

@@ -4,15 +4,15 @@ for stateful streams (``streaming.start_stream``).
 
 Both must leave every result unchanged: a pinned read has exactly the
 schema Spark infers, a rewritten file is re-inferred, a missing path
-still raises Spark's own error, and a stream's scoped confs never leak
-into the session."""
+still raises Spark's own error, a stream's scoped confs never leak
+into the session, and every memoized result (``sources.session_memo``)
+follows a rewritten input."""
 
 from __future__ import annotations
 
 import json
 import os
 import shutil
-import tempfile
 
 import duckdb
 import pyarrow as pa
@@ -23,7 +23,6 @@ from pyspark.errors import AnalysisException
 from multi_threaded_mapreduce_framework_spark.queries import all_queries
 from multi_threaded_mapreduce_framework_spark.sources import (
     TABLES,
-    layout_tag,
     read_parquet,
     table_path,
 )
@@ -161,22 +160,13 @@ def test_stream_state_partitions_pinned_in_checkpoint(spark, sf_dir, tmp_path):
 
 
 def test_q189_scopes_rocksdb_to_its_own_stream(spark, sf_dir):
-    from multi_threaded_mapreduce_framework_spark.queries import t2_streamq
+    from multi_threaded_mapreduce_framework_spark.sources import fixtures
     from tools.check_oracle import check
 
-    # force a fresh stream run, even if an earlier test built q189
-    t2_streamq._MATVIEW_STATE_CACHE.pop(
-        (spark.sparkContext.applicationId, sf_dir, "tws"), None
-    )
-    shutil.rmtree(
-        os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_readback",
-        ),
-        ignore_errors=True,
-    )
+    # force a fresh stream run, even if an earlier test built q189 (the
+    # build itself empties its layout directory)
+    for entry in [e for e in fixtures._MEMO if e[1] == ("q189_tws_totals", sf_dir)]:
+        del fixtures._MEMO[entry]
     before = (spark.conf.get(PROVIDER, None), spark.conf.get(PARTITIONS, None))
     con = duckdb.connect()
     try:
@@ -214,3 +204,52 @@ def test_spread_chain_recounts_a_rewritten_table(spark, tmp_path):
     assert fan_out() == 2
     write(_SPREAD_ROWS_PER_TASK * cores)  # same application, new table
     assert fan_out() == cores
+
+
+def test_memoized_results_follow_a_rewritten_fixture(spark, sf_dir, tmp_path):
+    """In one session, memoized results over a fixture that is then
+    rewritten in place answer for the new input: the localCheckpoint-ed
+    co-purchase pair counts, and q188's readback of the state a
+    checkpointed stream wrote (a rebuild must not resume the previous
+    version's checkpoint)."""
+    from multi_threaded_mapreduce_framework_spark.queries.t2_assoc import (
+        copurchase_pair_counts,
+    )
+    from tools.check_oracle import _norm_rows, check
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for t in ("lineitem", "events"):
+        shutil.copyfile(table_path(sf_dir, t), table_path(sf, t))
+    pairs_sql = """
+        WITH d AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
+        SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS cnt
+        FROM d a JOIN d b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        GROUP BY 1, 2"""
+
+    def assert_matches_input():
+        con = duckdb.connect()
+        try:
+            for t in ("lineitem", "events"):
+                con.execute(
+                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf, t)}')"
+                )
+            want = _norm_rows(["p1", "p2", "cnt"], con.execute(pairs_sql).fetchall())
+            got = copurchase_pair_counts(spark, sf).select("p1", "p2", "cnt")
+            assert _norm_rows(got.columns, got.collect()) == want
+            status, _, _, detail = check(
+                spark, con, QUERIES["q188_incremental_matview_readback"], sf
+            )
+            assert status == "OK", detail
+        finally:
+            con.close()
+
+    assert_matches_input()
+    for t, key, mod in (("lineitem", "l_orderkey", 2), ("events", "event_id", 3)):
+        path = table_path(sf, t)
+        table = pq.read_table(path)
+        kept = table.filter(pa.array(table.column(key).to_numpy() % mod != 0))
+        assert 0 < kept.num_rows < table.num_rows
+        pq.write_table(kept, path)  # same path, new version
+    assert_matches_input()

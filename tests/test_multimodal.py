@@ -437,12 +437,19 @@ def test_binaryfile_source_to_decode(spark, tmp_path):
         assert r.mean_intensity == expected
 
 
-def test_layout_tag_is_session_unique(spark):
+def test_layout_tag_is_session_unique(spark, sf_dir):
     """Derived-layout paths/table names embed the applicationId, so two
-    concurrent sessions on the same sf can never collide (ADVICE r3)."""
-    from multi_threaded_mapreduce_framework_spark.sources import layout_tag
+    concurrent sessions on the same sf can never collide (ADVICE r3),
+    and a digest of the fixture's file stamps, so a rewritten fixture
+    never reuses a layout derived from its previous version."""
+    import hashlib
+    import os
 
-    tag = layout_tag(spark, "/root/testdata/sf0.01")
+    from multi_threaded_mapreduce_framework_spark.sources import file_stamp, layout_tag
+
+    tag = layout_tag(spark, sf_dir)
+    sf = os.path.basename(sf_dir).replace(".", "_")
     app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
-    assert tag == f"sf0_01_{app}"
+    version = hashlib.sha1(repr(file_stamp(sf_dir)).encode()).hexdigest()[:10]
+    assert tag == f"{sf}_{app}_{version}"
     assert "-" not in tag and "." not in tag  # catalog-identifier safe

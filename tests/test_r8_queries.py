@@ -24,15 +24,11 @@ from multi_threaded_mapreduce_framework_spark.sources import load_table
 QUERIES = {n: q.builder for n, q in all_queries().items()}
 
 
-def test_q237_mapstate_snapshots_bounded_and_converged(spark, sf_dir):
+def test_q237_mapstate_snapshots_bounded_and_converged(spark, sf_dir, memo_get):
     """Update-mode MapState snapshots never overshoot: every emitted
     (user, type) cnt is <= the batch count, every count is positive,
     and the max over snapshots equals the batch count exactly (the
     monotone-readback law the query's max() relies on)."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
-
     out = {
         (r.user_id, r.event_type): r.cnt
         for r in QUERIES["q237_tws_mapstate_census"](spark, sf_dir).collect()
@@ -45,9 +41,7 @@ def test_q237_mapstate_snapshots_bounded_and_converged(spark, sf_dir):
         .collect()
     }
     assert out == batch
-    raw = _MATVIEW_STATE_CACHE[
-        (spark.sparkContext.applicationId, sf_dir, "tws_map")
-    ].collect()
+    raw = memo_get(("q237_tws_map", sf_dir)).collect()
     assert raw  # the stream really emitted snapshots
     seen_max: dict = {}
     for r in raw:
@@ -275,14 +269,10 @@ def test_q243_threshold_curve_laws(spark, sf_dir):
     assert rows[500].n_pairs == q27_pairs
 
 
-def test_q244_duplicate_absorption_law(spark, sf_dir):
+def test_q244_duplicate_absorption_law(spark, sf_dir, memo_get):
     """The dedup readback equals the batch census over the
     UN-duplicated fixture; the raw deduped sink holds exactly one row
     per event_id even though every event was delivered twice."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
-
     out = {
         r.event_type: r.cnt
         for r in QUERIES["q244_stream_dedup_readback"](spark, sf_dir).collect()
@@ -295,9 +285,7 @@ def test_q244_duplicate_absorption_law(spark, sf_dir):
         .collect()
     }
     assert out == batch
-    raw = _MATVIEW_STATE_CACHE[
-        (spark.sparkContext.applicationId, sf_dir, "dedup_readback")
-    ]
+    raw = memo_get(("q244_dedup", sf_dir))
     n_events = sum(batch.values())
     assert raw.count() == n_events  # one survivor per event
     assert raw.select("event_id").distinct().count() == n_events

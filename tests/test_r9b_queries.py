@@ -611,8 +611,7 @@ def test_q265_changelog_properties_and_batch_equality(spark, sf_dir):
         .collect()
     )
     assert got == {r.user_id: (r.cnt, r.sum_micro) for r in batch}
-    key = (spark.sparkContext.applicationId, sf_dir, "update_changelog")
-    raw = spark.table(f"q265_changelog_{abs(hash(key)) % 10**9}").collect()
+    raw = spark.table(f"q265_changelog_{abs(hash(sf_dir)) % 10**9}").collect()
     assert len(raw) > len(got)
     seen: dict[int, list[int]] = {}
     for r in raw:

@@ -701,3 +701,225 @@ def test_tws_value_state_ttl_expiry_laws(spark, replay_dir):
         assert emissions > len(batch_totals)
     finally:
         q.stop()
+
+
+def _write_mtime_ordered(df, out_dir, seen):
+    """Append ``df`` to ``out_dir`` as one file stamped after every file in
+    ``seen`` (the file stream replays by mtime); returns the new file set."""
+    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+        _data_files,
+        bump_new_file_mtimes,
+    )
+
+    df.coalesce(1).write.mode("append").parquet(out_dir)
+    bump_new_file_mtimes(out_dir, seen)
+    return set(_data_files(out_dir))
+
+
+def test_update_mode_emits_exactly_the_keys_each_batch_touched(spark, tmp_path):
+    """q265's update-mode contract, per micro-batch: a per-user running
+    count over a deterministic 4-chunk replay (event_id % 4, one chunk
+    per trigger) emits, in each batch, exactly the users that batch
+    touched, each with its correct cumulative count — no stale
+    re-emission, no skipped update. foreachBatch exposes the per-batch
+    change feed with its batch_id, so the check is exact."""
+    from multi_threaded_mapreduce_framework_spark.sources import load_table
+    from multi_threaded_mapreduce_framework_spark.streaming import drain
+
+    rep = str(tmp_path / "replay")
+    ev = load_table(spark, SF, "events").select("event_id", "user_id", "ts")
+    chunk_counts = []
+    seen: set = set()
+    for i in range(4):
+        chunk = ev.filter(F.col("event_id") % 4 == i)
+        chunk_counts.append(
+            {
+                r.user_id: r.c
+                for r in chunk.groupBy("user_id")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+                .collect()
+            }
+        )
+        seen = _write_mtime_ordered(chunk, rep, seen)
+    agg = (
+        events_stream(spark, rep)
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    )
+    captured: dict = {}
+
+    def capture(batch_df, batch_id):
+        rows = batch_df.collect()
+        if rows:
+            captured[batch_id] = {r.user_id: r.cnt for r in rows}
+
+    drain(
+        agg.writeStream.outputMode("update")
+        .foreachBatch(capture)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    assert len(captured) == 4
+    cum: dict = {}
+    for i, bid in enumerate(sorted(captured)):
+        expected = {}
+        for u, c in chunk_counts[i].items():
+            cum[u] = cum.get(u, 0) + c
+            expected[u] = cum[u]
+        assert captured[bid] == expected, f"batch {i}"
+
+
+def test_session_window_state_recovers_across_restart(spark, tmp_path):
+    """q269's open-session state across a mid-replay RESTART: the
+    watermarked session census runs over the time-ordered first half of
+    the events and stops with open sessions parked in the state store;
+    the second half and a far-future sentinel arrive during the
+    downtime; a restart from the same checkpoint into the same parquet
+    file sink must give q199's batch census. The stop lands inside a
+    true session (the median intra-session gap), and a straddle check
+    proves one, so the equality shows recovered intervals merging, not
+    two disjoint halves."""
+    from multi_threaded_mapreduce_framework_spark.queries.t2_text import (
+        SESSION_GAP_US,
+    )
+    from multi_threaded_mapreduce_framework_spark.sources import load_table
+    from multi_threaded_mapreduce_framework_spark.streaming import drain
+
+    src, ckpt, sink = (str(tmp_path / d) for d in ("events", "ckpt", "sink"))
+    ev = load_table(spark, SF, "events")
+    pairs = (
+        ev.selectExpr(
+            "user_id",
+            "unix_micros(ts) AS us",
+            "lag(unix_micros(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)"
+            " AS prev",
+        )
+        .filter((F.col("us") - F.col("prev")) <= F.lit(SESSION_GAP_US))
+        .orderBy("prev", "user_id")
+        .collect()
+    )
+    assert pairs, "fixture has no intra-session pair to split"
+    mid = pairs[len(pairs) // 2]
+    boundary_us = (int(mid.prev) + int(mid.us)) // 2
+    first = ev.filter(F.unix_micros("ts") <= boundary_us)
+    second = ev.filter(F.unix_micros("ts") > boundary_us)
+    seen: set = set()
+
+    def write_wave(df):
+        # two time-ordered chunks per wave
+        nonlocal seen
+        tiled = df.join(
+            df.selectExpr(
+                "ntile(2) OVER (ORDER BY ts, event_id) AS tile", "ts", "event_id"
+            ),
+            ["ts", "event_id"],
+        )
+        for i in (1, 2):
+            seen = _write_mtime_ordered(
+                tiled.filter(F.col("tile") == i).drop("tile"), src, seen
+            )
+
+    gap = f"{SESSION_GAP_US // 1_000_000} seconds"
+
+    def run_once():
+        per_session = (
+            events_stream(spark, src)
+            .withWatermark("ts", "2 hours")
+            .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_ev"))
+            .select(
+                "user_id",
+                "n_ev",
+                (F.unix_micros("sw.end") - F.unix_micros("sw.start")).alias("dur_us"),
+            )
+        )
+        drain(
+            per_session.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    write_wave(first)
+    run_once()  # open sessions at the boundary are parked in state
+    write_wave(second)
+    # the sentinel advances the final watermark past every real session;
+    # its own session never finalizes, so it never reaches the sink
+    vt = ev.schema["value"].dataType.simpleString()
+    sentinel = (
+        ev.orderBy(F.desc("ts"))
+        .limit(1)
+        .selectExpr(
+            "CAST(999999999 AS BIGINT) AS event_id",
+            "CAST(999999999 AS BIGINT) AS user_id",
+            "'click' AS event_type",
+            "ts + INTERVAL 30 DAYS AS ts",
+            f"CAST(0.0 AS {vt}) AS value",
+            "'{}' AS props",
+        )
+        .select(*ev.columns)
+    )
+    seen = _write_mtime_ordered(sentinel, src, seen)
+    straddle = (
+        first.groupBy("user_id")
+        .agg(F.max("ts").alias("last_before"))
+        .join(second.groupBy("user_id").agg(F.min("ts").alias("first_after")), "user_id")
+        .filter(
+            F.unix_micros("first_after") - F.unix_micros("last_before")
+            <= F.lit(SESSION_GAP_US)
+        )
+        .count()
+    )
+    assert straddle >= 1, "no session straddles the restart boundary"
+    run_once()  # restart: recovers the open intervals, merges, drains
+    got = {
+        tuple(r)
+        for r in spark.read.parquet(sink)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
+            F.sum("n_ev").cast("bigint").alias("n_events"),
+            F.sum("dur_us").cast("bigint").alias("sum_dur_us"),
+            F.max("n_ev").cast("bigint").alias("max_session_events"),
+        )
+        .collect()
+    }
+    batch = {
+        tuple(r)
+        for r in all_queries()["q199_session_window_native"].builder(spark, SF).collect()
+    }
+    assert got == batch
+
+
+def test_dedup_within_watermark_evicts_expired_keys(spark, tmp_path):
+    """The bounded half of dropDuplicatesWithinWatermark's contract
+    (q248's operator): with a 1-second delay, keys whose expiry
+    (first ts + delay) the watermark has passed are evicted, so their
+    late duplicates RE-EMIT, while a key still inside the delay stays
+    absorbed. Three one-file micro-batches: all events; the max-ts key
+    redelivered (absorbed, and its batch runs the eviction pass); then
+    every key first seen more than 2 s before max ts, redelivered at
+    max ts (above the watermark, so not dropped as late data)."""
+    from multi_threaded_mapreduce_framework_spark.sources import load_table
+    from multi_threaded_mapreduce_framework_spark.streaming import (
+        stream_dedup_within_watermark,
+    )
+
+    src = str(tmp_path / "events")
+    ev = load_table(spark, SF, "events")
+    n = ev.count()
+    max_ts = ev.agg(F.max("ts")).first()[0]
+    late = ev.filter(
+        F.col("ts") < F.lit(max_ts) - F.expr("interval 2 seconds")
+    ).withColumn("ts", F.lit(max_ts))
+    n_late = late.count()
+    assert 0 < n_late < n, "fixture span too small"
+    seen: set = set()
+    for wave in (ev, ev.orderBy(F.desc("ts"), F.asc("event_id")).limit(1), late):
+        seen = _write_mtime_ordered(wave, src, seen)
+    s = stream_dedup_within_watermark(
+        events_stream(spark, src), ["event_id"], watermark="1 second"
+    )
+    run_to_convergence(s, "stream_dedup_wm_evict", output_mode="append")
+    assert spark.table("stream_dedup_wm_evict").count() == n + n_late

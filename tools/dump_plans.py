@@ -68,7 +68,7 @@ SHOWCASE = {
     "q198_unpivot_doc_metrics": "unpivot plans as ONE Expand node ABOVE the per-lang aggregate (single parquet Scan in the whole plan) — the wide->long reshape multiplies 5 post-agg rows by 4 metrics, never re-scanning the table the way a UNION ALL formulation would.",
     "q200_recursive_cte_depths": "WITH RECURSIVE plans as Catalyst's UnionLoop — the engine owns the fixed-point iteration (frontier join per step against the parent relation) and the census above it is one partial agg; no driver-side loop exists anywhere in the query.",
     "q271_video_frame_extract_census": "THREE chained MapInPandas (synth -> frame-slice -> census) with no Exchange between them — the video streams and the sliced frame payloads are born and consumed inside the scan stage; the two exchanges above carry the count_distinct's (dur_class, media_id) partials (bounded by videos, not frames) and the 4-row class census — never payload bytes.",
-    "q275_stream_full_join_readback": "the batch plan contains NO join node: the full-outer join ran in the STREAM's two-sided state store, and this readback is the standard two-count_distinct Expand shape over the localCheckpointed sink output — Expand(x3) with partial aggregation below the first (user_id, event, gid) Exchange, then the user_id re-aggregate Exchange; both shuffles carry per-user partials, never raw pairs — the plan-level proof that the census times readback latency while the join cost lives in the streaming pipeline (check_streaming::ss_full_join_flushes_both_sides drives that end to end).",
+    "q275_stream_full_join_readback": "the batch plan contains NO join node: the full-outer join ran in the STREAM's two-sided state store, and this readback is the standard two-count_distinct Expand shape over the localCheckpointed sink output — Expand(x3) with partial aggregation below the first (user_id, event, gid) Exchange, then the user_id re-aggregate Exchange; both shuffles carry per-user partials, never raw pairs — the plan-level proof that the census times readback latency while the join cost lives in the streaming pipeline (tests/test_streaming_joins.py::test_full_outer_join_flushes_both_sides drives that end to end).",
 }
 
 HEADER = """# PLANS — physical plans of representative queries
